@@ -97,14 +97,11 @@ HEADLINE = [
 
 
 PIPELINE_CONFIGS = (
-    # key, use_lsh, dedup_near: exact-norm linking only (r01-comparable),
-    # full two-tier linking with MinHashLSH.approxSimilarityJoin (the
-    # benched number must exercise the LSH tier, VERDICT r01 #4), and the
+    # key, dedup_near: the full pipeline (both linking tiers), and the
     # near-duplicate file screen (--dedup-near; xxhash64 fast path,
     # VERDICT r02 #6)
-    ("kg_pipeline", False, False),
-    ("kg_pipeline_lsh", True, False),
-    ("kg_pipeline_neardedup", False, True),
+    ("kg_pipeline", False),
+    ("kg_pipeline_neardedup", True),
 )
 
 
@@ -124,7 +121,7 @@ def run_pipeline_tier(key: str, cpus: int) -> None:
     from datacapsule_spark.pipeline import run_pipeline
     from datacapsule_spark.session import get_spark
 
-    lsh, near = {k: (l, n) for k, l, n in PIPELINE_CONFIGS}[key]
+    near = dict(PIPELINE_CONFIGS)[key]
     spark = get_spark(
         f"bench-{key}", master=f"local[{cpus}]",
         shuffle_partitions=max(cpus, 32),
@@ -138,7 +135,7 @@ def run_pipeline_tier(key: str, cpus: int) -> None:
     for _ in range(2):  # run 0 = JIT warm-up (reported, not the metric)
         shutil.rmtree(work, ignore_errors=True)  # resume would skip stages
         t0 = time.time()
-        out = run_pipeline(spark, repos, work, use_lsh=lsh, dedup_near=near)
+        out = run_pipeline(spark, repos, work, dedup_near=near)
         n_triples = out["triples"].count()
         walls.append(time.time() - t0)
     print(json.dumps(
@@ -215,7 +212,7 @@ def main() -> None:
         pipeline_repeats = 3  # bench/BASELINE.md protocol: best-of-3
         result["pipeline_repeats"] = pipeline_repeats
         me = os.path.abspath(__file__)
-        for key, _, _ in PIPELINE_CONFIGS:
+        for key, _ in PIPELINE_CONFIGS:
             best = None
             for rep in range(pipeline_repeats):
                 proc = subprocess.run(

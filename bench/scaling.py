@@ -64,7 +64,7 @@ def run_level(cpus: int, corpus: str) -> dict:
     tracker = StageTracker(spark, work)
     # same params keying run_pipeline will use, so stage B resumes from
     # this boundary instead of re-extracting (markers validate params)
-    params = pipeline_params(repos, use_lsh=False)
+    params = pipeline_params(repos)
     t0 = time.time()
     from datacapsule_spark.extraction_schema import ALL_PREDICATES
 
@@ -81,7 +81,7 @@ def run_level(cpus: int, corpus: str) -> dict:
     # --- stage B: rest of the pipeline (link + CC + materialize),
     # resuming from the extraction checkpoint
     t0 = time.time()
-    res = run_pipeline(spark, repos, work, use_lsh=False)
+    res = run_pipeline(spark, repos, work)
     n_canon = res["triples"].count()
     full_wall = extract_wall + (time.time() - t0)
 

@@ -134,7 +134,7 @@ def main() -> None:
         work = "/tmp/skew_evidence_work"
         shutil.rmtree(work, ignore_errors=True)
         t0 = time.time()
-        out = run_pipeline(spark, repos, work, use_lsh=True)
+        out = run_pipeline(spark, repos, work)
         n_triples = out["triples"].count()
         wall = time.time() - t0
         result["pipeline"] = {

@@ -53,8 +53,8 @@ class StageTracker:
 
     A stage is resumable only if its completion marker records the SAME
     run_id and the SAME params hash as the current invocation — a rerun
-    with a different --run-id or toggled pipeline flags (use_lsh,
-    dedup_files, different input) re-executes instead of silently
+    with a different --run-id or toggled pipeline flags (dedup_files,
+    min_code_quality, different input) re-executes instead of silently
     returning the stale boundary (ADVICE r01)."""
 
     def __init__(self, spark: SparkSession, work_dir: str, run_id: str = "run0"):
@@ -153,6 +153,10 @@ class StageTracker:
         """
         if self.is_done(stage, params=params):
             return self.load(stage)
+        # the overwrite below deletes the old boundary first: an old
+        # marker left in place would resume an empty or partial boundary
+        # if this write fails
+        self.invalidate(stage)
         t0 = time.time()
         df = df_thunk()
         out = os.path.join(self._stage_dir(stage), "data")
@@ -231,8 +235,10 @@ class StageTracker:
         # atomic completion marker — written last, so a killed run
         # re-executes the stage (exactly-once at stage granularity);
         # records run_id + params hash so a changed configuration
-        # against the same work_dir invalidates instead of resuming
-        with open(self._marker(stage), "w") as f:
+        # against the same work_dir invalidates instead of resuming.
+        # Temp file + rename: a crash mid-write never leaves a torn marker.
+        tmp = self._marker(stage) + ".tmp"
+        with open(tmp, "w") as f:
             f.write(
                 json.dumps(
                     {
@@ -245,6 +251,7 @@ class StageTracker:
                     }
                 )
             )
+        os.replace(tmp, self._marker(stage))
         return self.load(stage)
 
     def lineage(self) -> DataFrame:

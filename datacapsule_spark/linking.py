@@ -1,24 +1,27 @@
-"""Distributed entity linking: MinHash-LSH blocking + cosine scoring.
+"""Distributed entity linking: exact name-gram similarity join.
 
 Upgrades the reference's exact-string node identity (NetworkX add_node
 on the same surface string, tools/entity_extraction.py:93-133 — J5 in
 SURVEY.md) to real alias resolution: symbol names that differ only by
 case convention (HttpClient / http_client) or small edits are linked.
 
-Two-tier design, both fully distributed:
+Two-tier design, both fully distributed and both exact:
 
-1. **Normalization tier** (exact, cheap): `norm = lower + strip
-   non-alnum`. Names sharing a normal form are aliases by construction.
-   This is a groupBy, no pairwise work — it alone resolves the planted
+1. **Normalization tier** (cheap): `norm = lower + strip non-alnum`.
+   Names sharing a normal form are aliases by construction. This is a
+   groupBy, no pairwise work — it alone resolves the planted
    CamelCase/snake_case variants.
-2. **LSH tier** (approximate, for near-miss aliases): character-3-gram
-   shingles → HashingTF → MinHashLSH.approxSimilarityJoin (Jaccard
-   distance ≤ threshold) → exact token-set Jaccard re-score via
-   DataFrame functions. Candidate generation is band-bucketed (the LSH
-   OR-amplification), so cost is ~O(candidates), never O(n²).
+2. **Fuzzy tier** (near-miss aliases): a prefix-filtered self-join over
+   the character-3-gram sets of the normalized names (the filter-and-
+   verify join of *Distributed Similarity Joins over Top-K Rankings*,
+   EDBT 2020). Every pair with gram-set Jaccard ≥ FUZZY_JACCARD is a
+   candidate — no recall loss, deterministic — and candidates are
+   re-scored (Jaccard or TF-IDF cosine) via DataFrame functions. Only
+   pairs sharing a prefix gram are ever formed, so cost is
+   ~O(candidates), never O(n²).
 
 At 10^12-file scale the distinct-symbol dictionary is << corpus size
-(vocabulary saturates), so the LSH join runs on the deduped name table,
+(vocabulary saturates), so the join runs on the deduped name table,
 not the corpus.
 """
 
@@ -26,6 +29,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Candidate cut of the fuzzy tier: every name pair whose 3-gram sets
+# have Jaccard >= FUZZY_JACCARD is re-scored.
+FUZZY_JACCARD = 0.6
 
 
 def normalize_name(col):
@@ -53,16 +60,22 @@ def exact_norm_alias_pairs(names: DataFrame, name_col: str = "name") -> DataFram
     )
 
 
-def lsh_alias_pairs(
+def fuzzy_alias_pairs(
     names: DataFrame,
     name_col: str = "name",
-    jaccard_max_distance: float = 0.4,
-    num_hash_tables: int = 5,
     min_rescore: float = 0.7,
     score_fn: str = "jaccard",
 ) -> DataFrame:
-    """Near-duplicate alias candidates via MinHash-LSH over 3-gram
-    shingles of the normalized name, re-scored exactly.
+    """Near-duplicate alias pairs: an exact prefix-filter self-join over
+    the 3-gram sets of the normalized names, re-scored exactly.
+
+    Candidates are ALL pairs with gram-set Jaccard >= FUZZY_JACCARD.
+    Each name's distinct grams are ordered rarest-first (gram frequency
+    over the name dictionary, ties by gram); a pair with J >= t shares
+    at least ⌈t·|A|⌉ grams, so it shares one of A's first
+    |A| − ⌈t·|A|⌉ + 1 grams (the prefix). The prefix grams are exploded
+    and self-joined under the length filter t·|A| <= |B| <= |A|/t, and
+    the exact array_intersect/array_union Jaccard verifies each pair.
 
     score_fn="jaccard" (default): exact 3-gram set Jaccard.
     score_fn="tfidf_cosine": TF-IDF-weighted cosine over the gram sets
@@ -82,7 +95,8 @@ def lsh_alias_pairs(
     """
     if score_fn not in ("jaccard", "tfidf_cosine"):
         raise ValueError("score_fn must be 'jaccard' or 'tfidf_cosine'")
-    from pyspark.ml.feature import HashingTF, MinHashLSH
+    # float slack: t·n must not round above an integer it equals
+    t = FUZZY_JACCARD - 1e-9
 
     n = (
         names.select(F.col(name_col).alias("name"))
@@ -90,65 +104,57 @@ def lsh_alias_pairs(
         .withColumn("norm", normalize_name(F.col("name")))
         .where(F.length("norm") >= 3)
     )
-    # char-3-gram shingles as array<string>; CHECKPOINTED because the
-    # MinHashLSH machinery evaluates this plan many times (fit pass +
-    # both approxSimilarityJoin sides, each of which explodes hashes) —
-    # when `names` arrives as a lazy view over a corpus-sized boundary
-    # (the pipeline's 20_link shape), every re-execution re-runs the
-    # corpus scan + distinct: measured 151s -> 6s at 1.5M files / 204
-    # names (bench/skew_evidence.py run). The name dictionary is
-    # vocabulary-sized by design, so materializing it is always cheap.
-    grams = (
-        n.withColumn(
-            "grams",
-            F.expr(
-                "transform(sequence(1, length(norm) - 2), i -> substring(norm, i, 3))"
-            ),
-        )
-        .withColumn("grams", F.array_distinct("grams"))
+    shingles = "transform(sequence(1, length(norm) - 2), i -> substring(norm, i, 3))"
+    grams = n.select("name", F.explode(F.array_distinct(F.expr(shingles))).alias("g"))
+    freq = grams.groupBy("g").agg(F.count("*").alias("df"))
+    # grams rarest-first per name; checkpointed (dictionary-sized) because
+    # both join sides and the re-score read it, each re-executing its plan
+    sets = (
+        grams.join(freq, "g")
+        .groupBy("name")
+        .agg(F.array_sort(F.collect_list(F.struct("df", "g"))).alias("o"))
+        .select("name", F.col("o.g").alias("grams"), F.size("o").alias("n"))
         .localCheckpoint(eager=True)
     )
-
-    tf = HashingTF(inputCol="grams", outputCol="features", numFeatures=1 << 18)
-    feat = tf.transform(grams)
-    mh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
+    prefix = sets.select(
+        "name",
+        "grams",
+        "n",
+        F.explode(
+            F.slice("grams", 1, F.col("n") - F.ceil(F.col("n") * t).cast("int") + 1)
+        ).alias("p"),
     )
-    model = mh.fit(feat)
+    A, B = prefix.alias("A"), prefix.alias("B")
+    jac = F.size(F.array_intersect("ga", "gb")) / F.size(F.array_union("ga", "gb"))
     pairs = (
-        model.approxSimilarityJoin(feat, feat, jaccard_max_distance, distCol="dist")
-        .where(F.col("datasetA.name") < F.col("datasetB.name"))
-        .select(
-            F.col("datasetA.name").alias("a"),
-            F.col("datasetB.name").alias("b"),
-            F.col("datasetA.grams").alias("ga"),
-            F.col("datasetB.grams").alias("gb"),
+        A.join(
+            B,
+            (F.col("A.p") == F.col("B.p"))
+            & (F.col("A.name") < F.col("B.name"))
+            & (F.col("B.n") >= F.col("A.n") * t)
+            & (F.col("A.n") >= F.col("B.n") * t),
         )
+        .select(
+            F.col("A.name").alias("a"),
+            F.col("B.name").alias("b"),
+            F.col("A.grams").alias("ga"),
+            F.col("B.grams").alias("gb"),
+        )
+        .where(jac >= FUZZY_JACCARD)
+        .dropDuplicates(["a", "b"])
     )
     if score_fn == "jaccard":
-        # exact Jaccard re-score, JVM-side (no UDF)
-        rescored = pairs.withColumn(
-            "score",
-            F.size(F.array_intersect("ga", "gb"))
-            / F.size(F.array_union("ga", "gb")),
-        ).drop("ga", "gb")
-        return rescored.where(F.col("score") >= min_rescore)
-
-    # TF-IDF cosine: idf from the name dictionary's gram dfs (grams is
-    # already checkpointed above; idf feeds norms and dots)
-    n_names = grams.count()
-    idf = (
-        grams.select(F.explode("grams").alias("g"))
-        .groupBy("g")
-        .agg(F.count("*").alias("df"))  # grams distinct per name
-        .withColumn(
-            "idf", F.log((F.lit(float(n_names)) + 1) / (F.col("df") + 1)) + 1
+        return pairs.select("a", "b", jac.alias("score")).where(
+            F.col("score") >= min_rescore
         )
-        .select("g", "idf")
-        .localCheckpoint(eager=False)
-    )
+
+    # TF-IDF cosine: idf from the name dictionary's gram dfs
+    n_names = sets.count()
+    idf = freq.select(
+        "g", (F.log(F.lit(n_names + 1.0) / (F.col("df") + 1)) + 1).alias("idf")
+    ).localCheckpoint(eager=False)
     norms = (
-        grams.select(F.col("name"), F.explode("grams").alias("g"))
+        sets.select(F.col("name"), F.explode("grams").alias("g"))
         .join(F.broadcast(idf), "g")
         .groupBy("name")
         .agg(F.sqrt(F.sum(F.col("idf") * F.col("idf"))).alias("nrm"))
@@ -184,23 +190,16 @@ def lsh_alias_pairs(
 
 
 def alias_pairs(
-    names: DataFrame,
-    name_col: str = "name",
-    use_lsh: bool = True,
-    score_fn: str = "jaccard",
+    names: DataFrame, name_col: str = "name", score_fn: str = "jaccard"
 ) -> DataFrame:
-    """Union of the exact-normal-form tier and (optionally) the LSH
-    tier; score_fn selects the LSH tier's exact re-score (see
-    lsh_alias_pairs). The deduped name dictionary is materialized ONCE
-    here when both tiers run — `names` is typically a lazy view over a
-    corpus-sized boundary, and each tier would otherwise re-run that
-    scan + distinct."""
-    n = names.select(F.col(name_col).alias("name")).distinct()
-    if use_lsh:
-        n = n.localCheckpoint(eager=True)
-    exact = exact_norm_alias_pairs(n)
-    if not use_lsh:
-        return exact
-    return exact.unionByName(
-        lsh_alias_pairs(n, score_fn=score_fn)
-    ).dropDuplicates(["a", "b"])
+    """Union of the exact-normal-form tier and the fuzzy tier; score_fn
+    selects the fuzzy tier's exact re-score (see fuzzy_alias_pairs).
+    The deduped name dictionary is materialized ONCE here — `names` is
+    typically a lazy view over a corpus-sized boundary, and each tier
+    would otherwise re-run that scan + distinct."""
+    n = names.select(F.col(name_col).alias("name")).distinct().localCheckpoint(eager=True)
+    return (
+        exact_norm_alias_pairs(n)
+        .unionByName(fuzzy_alias_pairs(n, score_fn=score_fn))
+        .dropDuplicates(["a", "b"])
+    )

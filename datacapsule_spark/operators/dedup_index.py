@@ -214,7 +214,7 @@ def compact_lsh_index(spark: SparkSession, path: str) -> int:
     the index, it will not work against object stores; and (b) between
     the two renames the index path briefly does not exist, so run
     compaction in a maintenance window: single writer, no concurrent
-    reader (e.g. pause the streaming foreachBatch probe). For a
+    reader (e.g. pause lsh_index_probe callers). For a
     no-gap swap, point readers at a versioned directory via an
     indirection of your own (pointer file / symlink flip)."""
     import os

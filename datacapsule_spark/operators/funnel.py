@@ -75,8 +75,7 @@ def funnel_user_depths(
     type_col: str = "event_type",
 ) -> DataFrame:
     """Per-user funnel table → (user_id, depth, reached_ts): the row
-    form behind funnel_counts (same greedy frontier chain, same
-    semantics as the streaming operator's per-span emission). Users
+    form behind funnel_counts (same greedy frontier chain). Users
     with no step-0 event do not appear (depth ≥ 1); reached_ts is the
     frontier time of the deepest step reached. Same scale shape as
     funnel_counts: k bounded user-keyed aggregations, no full-stream

@@ -594,8 +594,8 @@ def random_walks(
     out-neighbor.
 
     Returns (walk_id, step, node); walk_id is the seed node.  Each
-    step is one frontier-join + one per-walk window (rank over the
-    candidate neighbors) with an eager localCheckpoint — O(1) plan
+    step is one frontier-join + one per-walk min_by aggregation (argmin
+    over the candidate neighbors) with an eager localCheckpoint — O(1) plan
     depth, the engine's standard iterative shape (BFS/PageRank/CC).
     The per-step frontier is seed-table-sized, not graph-sized.
     """

@@ -175,10 +175,8 @@ def _spread_payloads(media: DataFrame, buckets: int = 64) -> DataFrame:
 
 
 def decode_features_kernel(strict: bool = False):
-    """The Arrow-batched decode kernel, shared verbatim by the batch
-    operator (decode_media_features) and its streaming twin
-    (streaming.stream_ops.streaming_decode_media_features) so the two
-    paths cannot drift."""
+    """The Arrow-batched decode kernel behind decode_media_features, as a
+    mapInPandas function."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -24,6 +24,11 @@ LANG_MARKERS = {
     "fr": ["le", "la", "les", "et", "des"],
 }
 
+# The 32 ASCII punctuation characters.
+_PUNCT = "".join(
+    chr(c) for c in (*range(33, 48), *range(58, 65), *range(91, 97), *range(123, 127))
+)
+
 
 def _tokens(text_col: str) -> F.Column:
     return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
@@ -53,10 +58,9 @@ def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 
 
 def quality_exprs(text_col: str = "text") -> dict[str, F.Column]:
-    """The quality features as raw column expressions — shared by the
-    batch quality_score projection and the stateless streaming twin
-    (streaming.stream_ops.streaming_quality_filter), so the two can
-    never diverge. Composite score in [0, 1]:
+    """The quality features as raw column expressions, for use inside
+    any projection or filter (quality_score is one). Composite score in
+    [0, 1]:
         score = 0.4*min(n_tokens/64, 1)
               + 0.3*(1 - punct_ratio)
               + 0.3*min(stopword_ratio*5, 1)
@@ -69,10 +73,6 @@ def quality_exprs(text_col: str = "text") -> dict[str, F.Column]:
     # regexp_replace([^!-/:-@\[-`{-~], "") BUILT the punct-only string
     # through the regex engine per char — 13x slower on long docs
     # (5.97 -> 0.45s at ~8.7KB/doc), verified char-for-char equal
-    _PUNCT = "".join(
-        chr(c)
-        for c in (*range(33, 48), *range(58, 65), *range(91, 97), *range(123, 127))
-    )
     punct = n_chars - F.length(F.translate(F.col(text_col), _PUNCT, ""))
     stop = F.array(*[F.lit(m) for ms in LANG_MARKERS.values() for m in ms])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))

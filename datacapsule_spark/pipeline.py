@@ -38,7 +38,6 @@ from .materialize import (
 
 def pipeline_params(
     repos: DataFrame,
-    use_lsh: bool = True,
     dedup_files: bool = False,
     dedup_near: bool = False,
     min_code_quality: float | None = None,
@@ -53,15 +52,13 @@ def pipeline_params(
         "dedup_near": dedup_near,
         "min_code_quality": min_code_quality,
     }
-    link = {**extract, "use_lsh": use_lsh}
-    return {"05_dedup_files": base, "10_extract": extract, "downstream": link}
+    return {"05_dedup_files": base, "10_extract": extract, "downstream": extract}
 
 
 def run_pipeline(
     spark: SparkSession,
     repos: DataFrame,
     work_dir: str,
-    use_lsh: bool = True,
     run_id: str = "run0",
     dedup_files: bool = False,
     dedup_near: bool = False,
@@ -96,7 +93,7 @@ def run_pipeline(
     """
     tracker = StageTracker(spark, work_dir, run_id)
     params = pipeline_params(
-        repos, use_lsh=use_lsh, dedup_files=dedup_files, dedup_near=dedup_near,
+        repos, dedup_files=dedup_files, dedup_near=dedup_near,
         min_code_quality=min_code_quality,
     )
 
@@ -147,11 +144,11 @@ def run_pipeline(
         params=params["10_extract"],
         partition_cardinality=len(ALL_PREDICATES),
     )
-    return _downstream(tracker, triples, use_lsh, params["downstream"])
+    return _downstream(tracker, triples, params["downstream"])
 
 
 def _downstream(
-    tracker: StageTracker, triples: DataFrame, use_lsh: bool, down: dict
+    tracker: StageTracker, triples: DataFrame, down: dict
 ) -> dict[str, DataFrame]:
     """Stages 20→70 from an extract boundary (shared by run_pipeline
     and run_incremental — the delta path re-enters here with the
@@ -173,7 +170,7 @@ def _downstream(
         .distinct()
     )
     pairs = tracker.materialize(
-        "20_link", lambda: alias_pairs(sym_names, use_lsh=use_lsh), params=down
+        "20_link", lambda: alias_pairs(sym_names), params=down
     )
 
     mapping = tracker.materialize(
@@ -252,7 +249,6 @@ def run_incremental(
     spark: SparkSession,
     new_repos: DataFrame,
     work_dir: str,
-    use_lsh: bool = True,
     run_id: str = "run0",
     min_code_quality: float | None = None,
 ) -> dict[str, DataFrame]:
@@ -353,13 +349,12 @@ def run_incremental(
     down = {
         "base": base_hash,
         "deltas": deltas,
-        "use_lsh": use_lsh,
         # must invalidate downstream when the gate moves, even though the
         # delta boundary names are unchanged (the re-extracted boundary's
         # CONTENT differs under a different threshold)
         "min_code_quality": min_code_quality,
     }
-    return _downstream(tracker, combined, use_lsh, down)
+    return _downstream(tracker, combined, down)
 
 
 def main() -> None:
@@ -367,7 +362,6 @@ def main() -> None:
     ap.add_argument("--input", required=True, help="repos parquet path or table")
     ap.add_argument("--output", required=True, help="work/warehouse directory")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
-    ap.add_argument("--no-lsh", action="store_true")
     ap.add_argument("--dedup-files", action="store_true",
                     help="drop byte-identical file contents before extraction")
     ap.add_argument("--dedup-near", action="store_true",
@@ -390,12 +384,12 @@ def main() -> None:
     )
     if args.incremental:
         out = run_incremental(
-            spark, repos, args.output, use_lsh=not args.no_lsh,
+            spark, repos, args.output,
             run_id=args.run_id, min_code_quality=args.min_code_quality,
         )
     else:
         out = run_pipeline(
-            spark, repos, args.output, use_lsh=not args.no_lsh,
+            spark, repos, args.output,
             run_id=args.run_id, dedup_files=args.dedup_files,
             dedup_near=args.dedup_near,
             min_code_quality=args.min_code_quality,

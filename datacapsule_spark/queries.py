@@ -30,11 +30,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression work onto one core, so a repartition is bought once; a
     real corpus has >= defaultParallelism splits and pays nothing here
     (no unconditional Exchange — asserted in tests/test_plans.py)."""
-    d = _t(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() >= par:
-        return d
-    return d.repartition(par, "doc_id")
+    return _spread(spark, _t(spark, sf_dir, "documents"), "doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -214,9 +210,8 @@ def distinct_parts_per_flag(spark, sf_dir):
 
 
 def events_hourly(spark, sf_dir):
-    """Tumbling time window (streaming-shaped agg, batch execution):
-    the watermarked Structured-Streaming version of this exact plan is
-    streaming/stream_ops.py::hourly_event_counts."""
+    """Tumbling time window: hourly event counts and mean value per
+    event type (date_trunc group key, one shuffle)."""
     e = _t(spark, sf_dir, "events")
     return (
         e.groupBy(
@@ -242,9 +237,8 @@ def events_lag_delta(spark, sf_dir):
 
 
 def sessionize_batch(spark, sf_dir):
-    """Batch twin of streaming/sessionize.py: gap-based sessions via
-    lag + running sum of session-break flags (two windows, one
-    shuffle on user_id)."""
+    """Gap-based sessions via lag + running sum of session-break flags
+    (two windows, one shuffle on user_id)."""
     e = _t(spark, sf_dir, "events").where(F.col("user_id") < 100)
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     # TIMESTAMP_NTZ needs a hop through TIMESTAMP to reach epoch seconds
@@ -401,7 +395,7 @@ def events_funnel_users(spark, sf_dir):
     """Per-user funnel table (operators/funnel.funnel_user_depths):
     each user's depth and deepest-step frontier time for
     view → click → purchase — the row form behind events_funnel's
-    counts and the batch twin of the streaming funnel's emission."""
+    counts."""
     from .operators.funnel import funnel_user_depths
 
     return funnel_user_depths(

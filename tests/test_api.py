@@ -14,7 +14,7 @@ def warehouse(spark, smoke_repos, tmp_path_factory):
     from datacapsule_spark.pipeline import run_pipeline
 
     work = str(tmp_path_factory.mktemp("api_wh"))
-    return run_pipeline(spark, smoke_repos, work, use_lsh=False)
+    return run_pipeline(spark, smoke_repos, work)
 
 
 @pytest.fixture(scope="module")

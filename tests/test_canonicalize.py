@@ -116,7 +116,7 @@ def test_linking_plus_cc_resolves_planted_aliases(spark):
          ("sym:graph_node",), ("sym:Unrelated",)],
         "name string",
     )
-    pairs = alias_pairs(names, use_lsh=False)
+    pairs = alias_pairs(names)
     mapping = {
         r["node_id"]: r["canonical_id"]
         for r in connected_components(pairs, "a", "b").collect()

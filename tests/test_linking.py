@@ -1,14 +1,21 @@
-"""Entity-linking tiers: exact normal form and MinHash-LSH candidates
-(SURVEY J5), plus the full pipeline with LSH enabled."""
+"""Entity-linking tiers: exact normal form and the prefix-filtered
+fuzzy similarity join (SURVEY J5), checked against brute-force
+all-pairs Jaccard, plus the full pipeline's fuzzy tier."""
 
 from __future__ import annotations
 
+import itertools
+import math
+import re
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 
 def test_lsh_alias_pairs_finds_near_names(spark):
-    from datacapsule_spark.linking import lsh_alias_pairs
+    from datacapsule_spark.linking import fuzzy_alias_pairs
 
     names = spark.createDataFrame(
         [
@@ -22,7 +29,7 @@ def test_lsh_alias_pairs_finds_near_names(spark):
     )
     pairs = {
         (r["a"], r["b"]): r["score"]
-        for r in lsh_alias_pairs(names, min_rescore=0.5).collect()
+        for r in fuzzy_alias_pairs(names, min_rescore=0.5).collect()
     }
     flat = set()
     for a, b in pairs:
@@ -34,14 +41,48 @@ def test_lsh_alias_pairs_finds_near_names(spark):
     assert all(0 < s <= 1 for s in pairs.values())
 
 
-def test_lsh_tfidf_cosine_rescore(spark):
-    """score_fn='tfidf_cosine' (the north-star wording: MinHash-LSH
-    blocking + TF-IDF cosine scoring): scores match a from-scratch
-    Python computation of idf-weighted binary-gram cosine over the
-    same dictionary, and the typo pair still links."""
-    import math
+def _oracle_scores(raw, score_fn):
+    """Brute-force all pairs a < b with gram Jaccard >= FUZZY_JACCARD,
+    scored by score_fn (jaccard, or idf-weighted binary-gram cosine with
+    idf from the same dictionary)."""
+    from datacapsule_spark.linking import FUZZY_JACCARD
 
-    from datacapsule_spark.linking import lsh_alias_pairs, normalize_name  # noqa: F401
+    def norm(s):
+        return re.sub(r"[^a-z0-9]", "", s.lower())
+
+    # name → char-3-grams of its normal form (>= 3 normal chars only)
+    dic = {
+        n: {norm(n)[i : i + 3] for i in range(len(norm(n)) - 2)}
+        for n in set(raw)
+        if len(norm(n)) >= 3
+    }
+    df = {}
+    for gs in dic.values():
+        for g in gs:
+            df[g] = df.get(g, 0) + 1
+    idf = {g: math.log((len(dic) + 1) / (d + 1)) + 1 for g, d in df.items()}
+
+    def cos(ga, gb):
+        dot = sum(idf[g] ** 2 for g in ga & gb)
+        na = math.sqrt(sum(idf[g] ** 2 for g in ga))
+        nb = math.sqrt(sum(idf[g] ** 2 for g in gb))
+        return dot / (na * nb)
+
+    out = {}
+    for a, b in itertools.combinations(sorted(dic), 2):
+        ga, gb = dic[a], dic[b]
+        jac = len(ga & gb) / len(ga | gb)
+        if jac >= FUZZY_JACCARD:
+            out[(a, b)] = jac if score_fn == "jaccard" else cos(ga, gb)
+    return out
+
+
+def test_lsh_tfidf_cosine_rescore(spark):
+    """score_fn='tfidf_cosine' (exact candidate join + TF-IDF cosine
+    scoring): scores match a from-scratch Python computation of
+    idf-weighted binary-gram cosine over the same dictionary, and the
+    typo pair still links."""
+    from datacapsule_spark.linking import fuzzy_alias_pairs
 
     raw = [
         "sym:HttpClientFactory",
@@ -52,50 +93,72 @@ def test_lsh_tfidf_cosine_rescore(spark):
     ]
     names = spark.createDataFrame([(n,) for n in raw], "name string")
     got = {
-        frozenset([r["a"], r["b"]]): r["score"]
-        for r in lsh_alias_pairs(
+        (r["a"], r["b"]): r["score"]
+        for r in fuzzy_alias_pairs(
             names, min_rescore=0.3, score_fn="tfidf_cosine"
         ).collect()
     }
-    assert frozenset(["sym:HttpClientFactory", "sym:HttpClientFactry"]) in got
-
-    # pure-Python oracle over the same normalized-gram dictionary
-    import re
-
-    def norm(s):
-        return re.sub(r"[^a-z0-9]", "", s.lower())
-
-    def grams(s):
-        g = norm(s)
-        return {g[i : i + 3] for i in range(len(g) - 2)}
-
-    dic = {n: grams(n) for n in raw if len(norm(n)) >= 3}
-    n_names = len(dic)
-    df = {}
-    for gs in dic.values():
-        for g in gs:
-            df[g] = df.get(g, 0) + 1
-    idf = {g: math.log((n_names + 1) / (d + 1)) + 1 for g, d in df.items()}
-
-    def cos(a, b):
-        ga, gb = dic[a], dic[b]
-        dot = sum(idf[g] ** 2 for g in ga & gb)
-        na = math.sqrt(sum(idf[g] ** 2 for g in ga))
-        nb = math.sqrt(sum(idf[g] ** 2 for g in gb))
-        return dot / (na * nb)
-
+    typo = ("sym:HttpClientFactory", "sym:HttpClientFactry")
+    assert typo in got
+    want = _oracle_scores(raw, "tfidf_cosine")
     for pair, score in got.items():
-        a, b = sorted(pair)
-        assert score == pytest.approx(cos(a, b), abs=1e-9), pair
+        assert score == pytest.approx(want[pair], abs=1e-9), pair
     # idf weighting: the shared-rare-grams typo pair outranks any
     # pair that would share only common affixes
-    assert got[frozenset(["sym:HttpClientFactory", "sym:HttpClientFactry"])] > 0.5
+    assert got[typo] > 0.5
     with pytest.raises(ValueError):
-        lsh_alias_pairs(names, score_fn="dice")
+        fuzzy_alias_pairs(names, score_fn="dice")
+
+
+@st.composite
+def _name_sets(draw):
+    """Random name dictionaries over a small alphabet (so grams collide),
+    with duplicates, case/separator variants that share a normal form,
+    one-character edits, and names whose normal form is < 3 chars."""
+    out = []
+    for base in draw(st.lists(st.text("abcd", max_size=10), min_size=1, max_size=14)):
+        out.append(base)
+        for kind in draw(st.lists(st.sampled_from("dusrix"), max_size=3)):
+            i = draw(st.integers(0, len(base)))
+            c = draw(st.sampled_from("abcd"))
+            out.append({
+                "d": base,
+                "u": base.upper(),
+                "s": base[:i] + "_" + base[i:],
+                "r": base[:i] + c + base[i + 1 :],
+                "i": base[:i] + c + base[i:],
+                "x": base[:i] + base[i + 1 :],
+            }[kind])
+    return out
+
+
+@pytest.mark.parametrize("score_fn", ["jaccard", "tfidf_cosine"])
+@settings(max_examples=15, deadline=None)
+@given(raw=_name_sets(), min_rescore=st.sampled_from([0.0, 0.7]))
+def test_fuzzy_alias_pairs_equal_brute_force(spark, score_fn, raw, min_rescore):
+    """The prefix-filtered join emits exactly the brute-force pairs with
+    Jaccard >= FUZZY_JACCARD that pass the min_rescore cut, with the
+    same scores."""
+    from datacapsule_spark.linking import fuzzy_alias_pairs
+
+    names = spark.createDataFrame([(n,) for n in raw], "name string")
+    got = {
+        (r["a"], r["b"]): r["score"]
+        for r in fuzzy_alias_pairs(
+            names, min_rescore=min_rescore, score_fn=score_fn
+        ).collect()
+    }
+    want = _oracle_scores(raw, score_fn)
+    # a score within float noise of the cut may land on either side
+    sure = {p for p, v in want.items() if v >= min_rescore + 1e-9}
+    maybe = {p for p, v in want.items() if v >= min_rescore - 1e-9}
+    assert sure <= set(got) <= maybe
+    for pair, score in got.items():
+        assert score == pytest.approx(want[pair], abs=1e-9), pair
 
 
 def test_pipeline_with_lsh_merges_typos(spark, tmp_path):
-    """Integration: use_lsh=True resolves near-miss aliases that the
+    """Integration: the fuzzy tier resolves near-miss aliases that the
     exact tier cannot (typo variants collapse to one canonical id)."""
     from datacapsule_spark.pipeline import run_pipeline
 
@@ -108,7 +171,7 @@ def test_pipeline_with_lsh_merges_typos(spark, tmp_path):
         ],
         "repo string, path string, commit string, lang string, content string",
     )
-    out = run_pipeline(spark, repos, str(tmp_path / "lshwork"), use_lsh=True)
+    out = run_pipeline(spark, repos, str(tmp_path / "fuzzywork"))
     syms = {
         r["obj"]
         for r in out["triples"].where(F.col("obj_type") == "symbol").collect()

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from datacapsule_spark.lineage import StageTracker
@@ -16,7 +17,7 @@ def _run(spark, smoke_repos, tmp_path, **kw):
 
 
 def test_pipeline_census_and_relational(spark, smoke_repos, tmp_path):
-    out = _run(spark, smoke_repos, tmp_path, use_lsh=False)
+    out = _run(spark, smoke_repos, tmp_path)
     nodes, edges = out["nodes"], out["edges"]
     # every edge endpoint exists in nodes (graph closure)
     ids = nodes.select("node_id")
@@ -75,7 +76,7 @@ def test_pipeline_resume_identical_output(spark, smoke_repos, tmp_path):
     """Kill-after-stage-k resume: invalidate a mid-pipeline stage and
     re-run — outputs must be identical, no duplicate triples."""
     work = tmp_path / "work2"
-    out1 = run_pipeline(spark, smoke_repos, str(work), use_lsh=False)
+    out1 = run_pipeline(spark, smoke_repos, str(work))
     t1 = sorted(
         (r["subj"], r["pred"], r["obj"]) for r in out1["triples"].collect()
     )
@@ -83,7 +84,7 @@ def test_pipeline_resume_identical_output(spark, smoke_repos, tmp_path):
     tracker = StageTracker(spark, str(work))
     for stage in ["30_canonicalize", "40_canon_edges", "50_nodes"]:
         tracker.invalidate(stage)
-    out2 = run_pipeline(spark, smoke_repos, str(work), use_lsh=False)
+    out2 = run_pipeline(spark, smoke_repos, str(work))
     t2 = sorted(
         (r["subj"], r["pred"], r["obj"]) for r in out2["triples"].collect()
     )
@@ -92,6 +93,28 @@ def test_pipeline_resume_identical_output(spark, smoke_repos, tmp_path):
     # lineage table recorded every stage
     stages = {r["stage"] for r in out2["lineage"].collect()}
     assert {"10_extract", "30_canonicalize", "40_canon_edges", "50_nodes"} <= stages
+
+
+def test_failed_rewrite_never_resumes_stale_boundary(spark, tmp_path):
+    """Re-materializing a stage under new params whose write fails must
+    not leave the old params' marker behind: Spark's overwrite already
+    deleted the old data, so a later call under the old params has to
+    re-run instead of resuming an empty boundary."""
+    tracker = StageTracker(spark, str(tmp_path / "wd"))
+
+    def ten():
+        return spark.range(10)
+
+    def failing():
+        err = F.raise_error(F.lit("write fails"))
+        return spark.range(10).select(
+            F.when(F.col("id") >= 0, err).otherwise(F.col("id")).alias("id")
+        )
+
+    assert tracker.materialize("s", ten, params={"v": 1}).count() == 10
+    with pytest.raises(Exception, match="write fails"):
+        tracker.materialize("s", failing, params={"v": 2})
+    assert tracker.materialize("s", ten, params={"v": 1}).count() == 10
 
 
 def test_pipeline_file_dedup(spark, smoke_repos, tmp_path):
@@ -104,7 +127,7 @@ def test_pipeline_file_dedup(spark, smoke_repos, tmp_path):
     )
     with_dups = smoke_repos.unionByName(dup)
     out = run_pipeline(
-        spark, with_dups, str(tmp_path / "wd"), use_lsh=False, dedup_files=True
+        spark, with_dups, str(tmp_path / "wd"), dedup_files=True
     )
     # the 10 duplicated contents collapse: exactly 500 distinct files
     n_files = (
@@ -133,7 +156,7 @@ def test_pipeline_near_dedup(spark, smoke_repos, tmp_path):
     )
     with_near = smoke_repos.unionByName(near)
     base = run_pipeline(
-        spark, with_near, str(tmp_path / "wd_base"), use_lsh=False,
+        spark, with_near, str(tmp_path / "wd_base"),
         dedup_files=True,  # byte-hash alone cannot drop the patched copies
     )
     n_files_base = (
@@ -143,7 +166,7 @@ def test_pipeline_near_dedup(spark, smoke_repos, tmp_path):
     assert n_files_base == 510
 
     out = run_pipeline(
-        spark, with_near, str(tmp_path / "wd_near"), use_lsh=False,
+        spark, with_near, str(tmp_path / "wd_near"),
         dedup_near=True,
     )
     n_files = (
@@ -155,7 +178,7 @@ def test_pipeline_near_dedup(spark, smoke_repos, tmp_path):
 
 def test_pipeline_skips_completed_stages(spark, smoke_repos, tmp_path, monkeypatch):
     work = tmp_path / "work3"
-    run_pipeline(spark, smoke_repos, str(work), use_lsh=False)
+    run_pipeline(spark, smoke_repos, str(work))
     # second run must not re-extract: poison the extractor and rerun
     import datacapsule_spark.pipeline as P
 
@@ -163,7 +186,7 @@ def test_pipeline_skips_completed_stages(spark, smoke_repos, tmp_path, monkeypat
         raise AssertionError("extract re-ran despite completed stage")
 
     monkeypatch.setattr(P, "extract_triples", boom)
-    out = run_pipeline(spark, smoke_repos, str(work), use_lsh=False)
+    out = run_pipeline(spark, smoke_repos, str(work))
     assert out["triples"].count() > 0
 
 
@@ -186,7 +209,7 @@ def test_split_stream_canon_equals_full_dedup(spark, smoke_repos):
         .distinct()
     )
     mapping = connected_components(
-        alias_pairs(names, use_lsh=False), "a", "b"
+        alias_pairs(names), "a", "b"
     ).localCheckpoint(eager=True)
     assert mapping.count() > 0  # the corpus plants alias variants
 
@@ -243,7 +266,7 @@ def test_stale_checkpoint_invalidated_on_changed_config(
     import datacapsule_spark.pipeline as P
 
     work = str(tmp_path / "work4")
-    run_pipeline(spark, smoke_repos, work, use_lsh=False)
+    run_pipeline(spark, smoke_repos, work)
 
     calls = {"link": 0}
     orig = P.alias_pairs
@@ -254,10 +277,10 @@ def test_stale_checkpoint_invalidated_on_changed_config(
 
     monkeypatch.setattr(P, "alias_pairs", counting)
     # same config → resumes, linking NOT re-run
-    run_pipeline(spark, smoke_repos, work, use_lsh=False)
+    run_pipeline(spark, smoke_repos, work)
     assert calls["link"] == 0
-    # toggled use_lsh → 20_link (and downstream) re-execute
-    run_pipeline(spark, smoke_repos, work, use_lsh=True)
+    # toggled min_code_quality → 20_link (and downstream) re-execute
+    run_pipeline(spark, smoke_repos, work, min_code_quality=0.0)
     assert calls["link"] == 1
     # different run_id → everything re-executes (extract marker invalid)
     def boom(*a, **k):
@@ -267,7 +290,7 @@ def test_stale_checkpoint_invalidated_on_changed_config(
     import pytest as _pytest
 
     with _pytest.raises(AssertionError, match="sentinel"):
-        run_pipeline(spark, smoke_repos, work, use_lsh=False, run_id="other")
+        run_pipeline(spark, smoke_repos, work, run_id="other")
 
 
 def test_pipeline_quality_gate(spark, smoke_repos, tmp_path):
@@ -286,7 +309,7 @@ def test_pipeline_quality_gate(spark, smoke_repos, tmp_path):
     )
     with_junk = smoke_repos.unionByName(junk)
     out = run_pipeline(
-        spark, with_junk, str(tmp_path / "wq"), use_lsh=False,
+        spark, with_junk, str(tmp_path / "wq"),
         min_code_quality=0.5,
     )
     gen_files = out["triples"].where(F.col("path").startswith("gen/")).count()
@@ -314,12 +337,10 @@ def test_incremental_ingest_equals_full_rebuild(spark, smoke_repos, tmp_path):
     assert 0 < delta.count() < smoke_repos.count()
 
     work = str(tmp_path / "inc")
-    run_pipeline(spark, base, work, use_lsh=False)
-    out_inc = run_incremental(spark, delta, work, use_lsh=False)
+    run_pipeline(spark, base, work)
+    out_inc = run_incremental(spark, delta, work)
 
-    full = run_pipeline(
-        spark, smoke_repos, str(tmp_path / "full"), use_lsh=False
-    )
+    full = run_pipeline(spark, smoke_repos, str(tmp_path / "full"))
     t_inc = sorted(
         (r["subj"], r["pred"], r["obj"]) for r in out_inc["triples"].collect()
     )
@@ -340,14 +361,14 @@ def test_incremental_ingest_equals_full_rebuild(spark, smoke_repos, tmp_path):
     orig = P.extract_triples
     P.extract_triples = boom
     try:
-        again = run_incremental(spark, delta, work, use_lsh=False)
+        again = run_incremental(spark, delta, work)
         assert again["triples"].count() == len(t_inc)
     finally:
         P.extract_triples = orig
 
     # without a base run, incremental refuses
     with _pytest.raises(RuntimeError):
-        run_incremental(spark, delta, str(tmp_path / "nobase"), use_lsh=False)
+        run_incremental(spark, delta, str(tmp_path / "nobase"))
 
 
 def test_incremental_updated_file_supersedes(spark, smoke_repos, tmp_path):
@@ -360,7 +381,7 @@ def test_incremental_updated_file_supersedes(spark, smoke_repos, tmp_path):
     from datacapsule_spark.pipeline import run_incremental
 
     work = str(tmp_path / "upd")
-    run_pipeline(spark, smoke_repos, work, use_lsh=False)
+    run_pipeline(spark, smoke_repos, work)
 
     # delta 1: updated versions of 10 existing files (content changed)
     upd = (
@@ -371,7 +392,7 @@ def test_incremental_updated_file_supersedes(spark, smoke_repos, tmp_path):
         )
         .localCheckpoint(eager=True)  # in-memory: schema-only signature
     )
-    out1 = run_incremental(spark, upd, work, use_lsh=False)
+    out1 = run_incremental(spark, upd, work)
     # per-file uniqueness invariant: exactly one has_loc triple per file
     dup_files = (
         out1["triples_raw"].where(F.col("pred") == "has_loc")
@@ -404,7 +425,7 @@ def test_incremental_updated_file_supersedes(spark, smoke_repos, tmp_path):
         )
         .localCheckpoint(eager=True)
     )
-    out2 = run_incremental(spark, brand_new, work, use_lsh=False)
+    out2 = run_incremental(spark, brand_new, work)
     late = (
         out2["triples_raw"].where(F.col("repo").startswith("late/"))
         .select("path").distinct().count()
@@ -425,7 +446,7 @@ def test_incremental_quality_gate_change_invalidates_downstream(
 
     small = smoke_repos.where(F.abs(F.xxhash64("repo", "path")) % 10 == 0)
     work = str(tmp_path / "qg")
-    run_pipeline(spark, small, work, use_lsh=False)
+    run_pipeline(spark, small, work)
 
     junk = small.limit(3).select(
         "repo",
@@ -435,7 +456,7 @@ def test_incremental_quality_gate_change_invalidates_downstream(
     ).localCheckpoint(eager=True)
 
     gated = run_incremental(
-        spark, junk, work, use_lsh=False, min_code_quality=0.5
+        spark, junk, work, min_code_quality=0.5
     )
     assert (
         gated["triples"].where(F.col("path").startswith("gen/")).count() == 0
@@ -444,7 +465,7 @@ def test_incremental_quality_gate_change_invalidates_downstream(
     # way through canonicalization into the FINAL triples — a stale
     # downstream resume would still show zero
     ungated = run_incremental(
-        spark, junk, work, use_lsh=False, min_code_quality=None
+        spark, junk, work, min_code_quality=None
     )
     assert (
         ungated["triples"].where(F.col("path").startswith("gen/")).count() > 0

@@ -479,9 +479,9 @@ def test_argmin_round_bodies_window_free(spark):
     captured = []
     orig = CDF.localCheckpoint
 
-    def capturing(self, eager=True):
+    def capturing(self, *args, **kwargs):
         captured.append(explain_report(self))
-        return orig(self, eager=eager)
+        return orig(self, *args, **kwargs)
 
     CDF.localCheckpoint = capturing
     try:

@@ -1,5 +1,5 @@
-"""Tests: IVF ANN recall vs brute force; stateful sessionization vs the
-pure-Python fold oracle."""
+"""Tests: IVF ANN recall vs brute force; the Arrow kNN kernel vs the
+HOF kernel."""
 
 from __future__ import annotations
 
@@ -291,61 +291,3 @@ class TestArrowKNN:
                 kernel="arrow", max_queries=10,
             )
 
-
-class TestSessionize:
-    def test_fold_oracle(self):
-        from datacapsule_spark.streaming.sessionize import fold_sessions
-
-        ev = [(0, 1.0), (1000, 2.0), (10_000_000, 3.0)]
-        out = fold_sessions(ev, gap_s=60)
-        assert out == [(0, 1000, 2, 3.0), (10_000_000, 10_000_000, 1, 3.0)]
-
-    def test_streaming_sessions_match_oracle(self, spark, tmp_path):
-        from datacapsule_spark.streaming.sessionize import fold_sessions, sessionize
-
-        events = (
-            spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-            .where(F.col("user_id") < 20)
-            .select("ts", "user_id", "value")
-        )
-        src = str(tmp_path / "sess_in")
-        events.write.mode("overwrite").parquet(src)
-
-        stream = spark.readStream.schema(events.schema).parquet(src)
-        q = (
-            sessionize(stream, gap_s=1800.0)
-            .writeStream.format("memory")
-            .queryName("sessions_mem")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        got = {
-            (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-            for r in spark.sql("select * from sessions_mem").collect()
-        }
-        # oracle: fold per user. A session is CLOSED (emitted) if a
-        # later event superseded it, or if the end-of-stream watermark
-        # (global max ts - 1h) passed its event-time timeout (end+gap).
-        import pandas as pd
-
-        pdf = events.toPandas()
-        wm_ms = int(pd.Timestamp(pdf["ts"].max()).value // 10**6) - 3_600_000
-        want = set()
-        for uid, grp in pdf.groupby("user_id"):
-            ev = [
-                (int(pd.Timestamp(t).value // 10**6), float(v))
-                for t, v in zip(grp["ts"], grp["value"])
-            ]
-            folded = fold_sessions(ev, gap_s=1800.0)
-            closed = list(folded[:-1])
-            last = folded[-1]
-            if wm_ms > last[1] + 1_800_000:  # timeout fired before stream end
-                closed.append(last)
-            for s in closed:
-                want.add(
-                    (uid, pd.Timestamp(s[0], unit="ms"), pd.Timestamp(s[1], unit="ms"), s[2])
-                )
-        assert got == want
-        assert len(got) > 0
