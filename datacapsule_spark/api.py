@@ -16,11 +16,32 @@ engines and keep their call sites:
 - nodes_count                  (dspy_inference.py:144-154 → A1)
 - query_database               (dspy_query_db.py:54-158 → S5; the LLM
   NL→SQL step stays at the driver — this engine executes the SQL with
-  the same markdown-fence stripping and result envelope)
+  the same markdown-fence stripping and result envelope, read-only
+  queries only, at most MAX_SQL_ROWS rows)
 - format_results               (dspy_query_db.py:170-204 → A8 max-width
   table rendering of the envelope)
 - save_interaction / load_interactions (app.py:253-275 saved-data JSON
   → S9, re-expressed as O(record) atomic per-id files, DataFrame-loadable)
+
+Two tiers answer the six graph/lookup/vector tools, chosen by one row
+limit, ``driver_threshold`` (the ``canonicalize.connected_components``
+pattern):
+
+- index tier: nodes of at most ``driver_threshold`` rows are collected
+  once into an immutable driver index (``_ServingIndex``), like the
+  reference's in-RAM NetworkX graph and vector store (react_tools.py:
+  45-65, nanovector_db.py:69-110). The embeddings join it when the API
+  opens, the edges on the first graph-tool call (a both-direction CSR
+  adjacency, built lazily so that a restart answering only lookups never
+  collects them), each under the same row limit. Each tool call is then
+  plain numpy/dict work: zero Spark jobs. The index is a snapshot taken
+  at open: rows written to the tables afterwards are not seen.
+- Spark tier: above the limit (or with ``driver_threshold=0``) each call
+  runs the distributed ``traverse`` / ``vectorize`` functions over the
+  cached tables.
+
+Both tiers return the same answers (tests/test_serving_index.py).
+query_database always runs on Spark.
 
 The X5 ReAct loop itself is LLM orchestration, not engine code; these
 are the engine entry points it calls.
@@ -28,14 +49,212 @@ are the engine entry points it calls.
 
 from __future__ import annotations
 
+import json
+import os
 import re
+import tempfile
+import threading
+from collections import Counter
 
+import numpy as np
+import pandas as pd
+from pyspark.errors import ParseException
+from pyspark.errors.exceptions.captured import capture_sql_exception
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .traverse import NODE_HIERARCHY
 from .traverse import find_nodes_by_node_type as _bfs
 from .traverse import get_adjacent_descriptions
 from .vectorize import cosine_topk, hash_embed_text
+
+# Row limit per table for the driver index (nodes, edges, embeddings). At
+# the limit (4-core host), 500k node rows index in ~4 s and hold ~450 MB of
+# driver memory, and 500k edges build their adjacency in ~0.4 s; bigger
+# tables stay on the Spark tier.
+DRIVER_THRESHOLD = 500_000
+# query_database collects at most this many rows ("truncated": True beyond).
+MAX_SQL_ROWS = 10_000
+MAX_HOPS = 7  # traverse.find_nodes_by_node_type's default
+
+
+def _collect_capped(df: DataFrame, cap: int, arrow: bool = False):
+    """All rows of df (a pandas frame when ``arrow``), or None when it has
+    more than ``cap``: the limit rides on the collect itself, so sizing
+    the tier costs no counting pass."""
+    if cap <= 0:
+        return None
+    capped = df.limit(cap + 1)
+    rows = capped.toPandas() if arrow else capped.collect()
+    return None if len(rows) > cap else rows
+
+
+def _segments(ptr: np.ndarray, sel: np.ndarray):
+    """Flat indices of the CSR slices ptr[i]:ptr[i+1] for i in sel, and
+    each slice's length (one vector op per BFS hop, no per-node loop)."""
+    lo = ptr[sel]
+    n = ptr[sel + 1] - lo
+    ends = np.cumsum(n)
+    return np.repeat(lo - ends + n, n) + np.arange(ends[-1] if len(n) else 0), n
+
+
+class _ServingIndex:
+    """Driver-resident snapshot of a warehouse. Read-only once built;
+    the one mutation, the lazy adjacency build, runs under a lock.
+
+    Nodes are kept per distinct (node_id, node_type) "typed row", grouped
+    by node position, because the traversal semantics are per typed row:
+    a node listed twice with two types is expanded from, and reached as,
+    each type separately (exactly what the Spark tier's joins do).
+    """
+
+    def __init__(self, rows: list, hierarchy: dict[str, int], emb: pd.DataFrame | None):
+        self.total = len(rows)
+        self.type_counts = Counter(r["node_type"] for r in rows)
+        self.first_row: dict = {}  # node_id → its first row, as Spark's first()
+        typed: dict[tuple, None] = {}
+        names: dict[str, set] = {}
+        for r in rows:
+            nid = r["node_id"]
+            if nid is None:  # never matches a Spark join or filter
+                continue
+            self.first_row.setdefault(nid, r)
+            typed[(nid, r["node_type"])] = None
+            if r["name"] is not None:
+                names.setdefault(nid, set()).add(r["name"])
+        self.ids = list(self.first_row)
+        self.pos = {nid: i for i, nid in enumerate(self.ids)}
+        self.names = [frozenset(names.get(nid, ())) for nid in self.ids]
+
+        pairs = sorted(typed, key=lambda p: self.pos[p[0]])
+        self.row_node = np.array([self.pos[nid] for nid, _ in pairs], dtype=np.int64)
+        self.row_ptr = np.zeros(len(self.ids) + 1, dtype=np.int64)
+        np.cumsum(np.bincount(self.row_node, minlength=len(self.ids)), out=self.row_ptr[1:])
+        # NaN rank = type outside the hierarchy: every comparison is False,
+        # as a NULL rank fails the Spark tier's between() predicate
+        self.rank = np.array([hierarchy.get(t, np.nan) for _, t in pairs], dtype=np.float64)
+        self.hierarchy = hierarchy
+        self.type_code = {t: i for i, t in enumerate(dict.fromkeys(t for _, t in pairs))
+                          if t is not None}
+        self.row_code = np.array([self.type_code.get(t, -1) for _, t in pairs], dtype=np.int64)
+
+        self.emb = None
+        if emb is not None:
+            mat = (np.stack(emb["embedding"].to_numpy()).astype(np.float64)
+                   if len(emb) else np.zeros((0, 0)))
+            self.emb = {
+                "mat": mat,
+                "norm": np.sqrt(np.einsum("ij,ij->i", mat, mat)),
+                "id": emb["id"].to_numpy(dtype=object),
+                "entity_type": emb["entity_type"].to_numpy(dtype=object),
+                "name": emb["name"].to_numpy(dtype=object),
+            }
+
+        self._adj = None  # (ptr, adj, phantom positions), built by graph()
+        self._lock = threading.Lock()
+
+    # ----------------------------------------------------- adjacency
+
+    def graph(self, edges: DataFrame, cap: int):
+        """The both-direction CSR adjacency, built from ``edges`` on first
+        use; None (for good) when they have more than ``cap`` rows."""
+        if self._adj is None:
+            with self._lock:
+                if self._adj is None:
+                    e = _collect_capped(edges.select("src", "dst"), cap, arrow=True)
+                    self._adj = False if e is None else self._build_adjacency(
+                        e["src"].to_numpy(dtype=object), e["dst"].to_numpy(dtype=object))
+        return self._adj or None
+
+    def _build_adjacency(self, src: np.ndarray, dst: np.ndarray):
+        # a neighbour must exist in the nodes (the Spark tier joins it to
+        # the nodes); a source need not: adjacency from an id that is only
+        # an edge endpoint still answers, so such ids get extra
+        # "phantom" positions after the node positions, with no typed rows
+        n = len(self.ids)
+        nodes = pd.Index(self.ids)
+        frm = np.concatenate([src, dst])
+        to = nodes.get_indexer(np.concatenate([dst, src]))
+        keep = (to >= 0) & pd.notna(frm)
+        frm, to = frm[keep], to[keep]
+        at = nodes.get_indexer(frm)
+        missing = at < 0
+        phantoms = pd.Index(pd.unique(frm[missing]))
+        at[missing] = n + phantoms.get_indexer(frm[missing])
+        size = n + len(phantoms)
+        ptr = np.zeros(size + 1, dtype=np.int64)
+        np.cumsum(np.bincount(at, minlength=size), out=ptr[1:])
+        adj = to[np.argsort(at, kind="stable")].astype(np.int32)
+        return ptr, adj, {p: n + i for i, p in enumerate(phantoms)}
+
+    # ----------------------------------------------------- tools
+
+    def reach(self, adj, start: str, target: str) -> list[str]:
+        """traverse.find_nodes_by_node_type for one start, on the driver:
+        rank-pruned BFS, one vectorised frontier expansion per hop."""
+        code = self.type_code.get(target)
+        s = self.pos.get(start)
+        if code is None or s is None:  # absent target type / start
+            return []
+        ptr, nbr, _ = adj
+        is_target = self.row_code == code
+        frontier = np.arange(self.row_ptr[s], self.row_ptr[s + 1])
+        hits = {s} if is_target[frontier].any() else set()
+        t = self.hierarchy.get(target, np.nan)
+        start_rank = self.rank[frontier]
+        if np.isnan(t) or np.isnan(start_rank).all():  # unranked: no expansion
+            return [self.ids[h] for h in hits]
+        up = t < np.nanmin(start_rank)
+        visited = np.zeros(len(self.ids), dtype=bool)
+        visited[s] = True
+        for _ in range(MAX_HOPS):
+            # each hop moves weakly toward the target rank from the
+            # CURRENT typed row, never past it (traverse.py direction rules)
+            flat, n = _segments(ptr, self.row_node[frontier])
+            cur = np.repeat(self.rank[frontier], n)
+            cand, n = _segments(self.row_ptr, nbr[flat])
+            cur = np.repeat(cur, n)
+            r = self.rank[cand]
+            ok = ((t <= r) & (r <= cur)) if up else ((cur <= r) & (r <= t))
+            cand = np.unique(cand[ok])
+            frontier = cand[~visited[self.row_node[cand]]]
+            if not len(frontier):
+                break
+            visited[self.row_node[frontier]] = True
+            hits.update(self.row_node[frontier[is_target[frontier]]].tolist())
+        return sorted(self.ids[h] for h in hits)
+
+    def adjacent(self, adj, names: list[str]) -> list[str]:
+        ptr, nbr, phantoms = adj
+        at = [p for p in (self.pos.get(n, phantoms.get(n)) for n in names) if p is not None]
+        flat, _ = _segments(ptr, np.asarray(at, dtype=np.int64))
+        out: set[str] = set()
+        for v in np.unique(nbr[flat]).tolist():
+            out |= self.names[v]
+        return sorted(out)
+
+    def vector(self, q: np.ndarray, node_type, top_k: int, threshold: float) -> list[dict]:
+        """vectorize.cosine_topk on the driver: filter by type and
+        threshold BEFORE ranking, drop zero-norm rows, ties by id."""
+        e = self.emb
+        if not len(e["id"]) or top_k < 1:
+            return []
+        q = q.astype(np.float64)
+        den = e["norm"] * np.sqrt(q @ q)
+        ok = den > 0
+        # einsum reduces every row the same way, so equal rows score
+        # bit-equal and their tie is broken by id, as on the Spark tier
+        sim = np.divide(np.einsum("ij,j->i", e["mat"], q), den,
+                        out=np.zeros_like(den), where=ok)
+        if node_type is not None:
+            ok &= e["entity_type"] == node_type
+        cand = np.flatnonzero(ok & (sim >= threshold))
+        if len(cand) > top_k:  # keep the top_k scores and all ties with the last
+            kth = np.partition(sim[cand], len(cand) - top_k)[len(cand) - top_k]
+            cand = cand[sim[cand] >= kth]
+        best = sorted(cand.tolist(), key=lambda i: (-sim[i], e["id"][i]))[:top_k]
+        return [{"id": e["id"][i], "entity_type": e["entity_type"][i],
+                 "name": e["name"][i], "similarity": float(sim[i])} for i in best]
 
 
 class DatacapsuleAPI:
@@ -49,51 +268,88 @@ class DatacapsuleAPI:
         edges: DataFrame,
         embeddings: DataFrame | None = None,
         hierarchy: dict[str, int] | None = None,
+        driver_threshold: int = DRIVER_THRESHOLD,
     ):
         self.spark = spark
-        # serving caches the graph, mirroring the reference's in-RAM
-        # load (react_tools.py:45-65) — but distributed, not driver-RAM
-        self.nodes = nodes.cache()
-        self.edges = edges.cache()
+        self.nodes = nodes
+        self.edges = edges
         self.embeddings = embeddings
         # node_type → rank map for traversal pruning; None = the code-KG
         # taxonomy. Pass the reference's NODE_HIERARCHY to serve an
         # ingested marine-species graph (tests/test_interactions_replay.py)
         self.hierarchy = hierarchy
+        self.driver_threshold = driver_threshold
+        self._dim = None  # Spark-tier embedding width, probed once
+        # Tier choice: nodes with at most driver_threshold rows are served
+        # from a driver index snapshot taken here (embeddings too, under
+        # the same limit); its edge adjacency is built on the first graph
+        # call (_graph). Otherwise every tool runs on Spark over the
+        # cached tables, mirroring the reference's in-RAM load
+        # (react_tools.py:45-65) but distributed.
+        rows = _collect_capped(nodes, driver_threshold)
+        emb = None
+        if rows is not None and embeddings is not None:
+            emb = _collect_capped(
+                embeddings.select("id", "entity_type", "name", "embedding"),
+                driver_threshold, arrow=True)
+        self._index = None if rows is None else _ServingIndex(
+            rows, hierarchy or NODE_HIERARCHY, emb)
+        if self._index is None:
+            nodes.cache()
+            edges.cache()
 
     @classmethod
-    def from_warehouse(cls, spark: SparkSession, base_dir: str) -> "DatacapsuleAPI":
+    def from_warehouse(cls, spark: SparkSession, base_dir: str, **kwargs) -> "DatacapsuleAPI":
         nodes = spark.read.parquet(f"{base_dir}/nodes")
         edges = spark.read.parquet(f"{base_dir}/edges")
-        return cls(spark, nodes, edges)
+        return cls(spark, nodes, edges, **kwargs)
+
+    def _graph(self):
+        """The index adjacency, or None when the graph tools run on Spark
+        (over uncached tables when only the edges are over the limit)."""
+        if self._index is None:
+            return None
+        return self._index.graph(self.edges, self.driver_threshold)
 
     # ------------------------------------------------------ graph tools
 
     def find_nodes_by_node_type(self, start_node: str, node_type: str) -> dict:
         """Tool 1: nodes of `node_type` reachable from `start_node`."""
-        starts = self.spark.createDataFrame(
-            [("q", start_node)], "query_id string, node_id string"
-        )
-        hits = _bfs(self.nodes, self.edges, starts, node_type, hierarchy=self.hierarchy)
-        names = sorted(r["node_id"] for r in hits.collect())
+        adj = self._graph()
+        if adj is not None:
+            names = self._index.reach(adj, start_node, node_type)
+        else:
+            starts = self.spark.createDataFrame(
+                [("q", start_node)], "query_id string, node_id string"
+            )
+            hits = _bfs(self.nodes, self.edges, starts, node_type, hierarchy=self.hierarchy)
+            names = sorted(r["node_id"] for r in hits.collect())
         return {"nodes_count": len(names), "nodes": names}
 
     def batch_find_nodes_by_node_type(
         self, start_nodes: list[str], node_type: str
     ) -> dict:
-        """Tool 2: one traversal DAG for many starts (set-oriented)."""
-        starts = self.spark.createDataFrame(
-            [(s, s) for s in start_nodes], "query_id string, node_id string"
-        )
-        hits = _bfs(self.nodes, self.edges, starts, node_type, hierarchy=self.hierarchy)
-        out: dict[str, list[str]] = {s: [] for s in start_nodes}
-        for r in hits.collect():
-            out[r["query_id"]].append(r["node_id"])
+        """Tool 2: each start traversed independently (on Spark, all in
+        one set-oriented traversal DAG)."""
+        adj = self._graph()
+        if adj is not None:
+            out = {s: self._index.reach(adj, s, node_type) for s in start_nodes}
+        else:
+            starts = self.spark.createDataFrame(
+                [(s, s) for s in start_nodes], "query_id string, node_id string"
+            )
+            hits = _bfs(self.nodes, self.edges, starts, node_type, hierarchy=self.hierarchy)
+            out = {s: [] for s in start_nodes}
+            for r in hits.collect():
+                out[r["query_id"]].append(r["node_id"])
         return {s: {"nodes_count": len(v), "nodes": sorted(v)} for s, v in out.items()}
 
     def get_node_attribute(self, node_id: str) -> dict | None:
         """Tool 4: full attr dict of one node."""
-        row = self.nodes.where(F.col("node_id") == node_id).first()
+        if self._index is not None:
+            row = self._index.first_row.get(node_id)
+        else:
+            row = self.nodes.where(F.col("node_id") == node_id).first()
         if row is None:
             return None
         d = row.asDict()
@@ -102,17 +358,18 @@ class DatacapsuleAPI:
 
     def get_adjacent_node_descriptions(self, names: list[str]) -> list[str]:
         """Tool 5: distinct 1-hop neighbor names for the given nodes."""
+        adj = self._graph()
+        if adj is not None:
+            return self._index.adjacent(adj, names)
         df = self.spark.createDataFrame([(n,) for n in names], "node_id string")
         rows = get_adjacent_descriptions(self.nodes, self.edges, df).collect()
-        seen: list[str] = []
-        for r in rows:
-            for d in r["descriptions"]:
-                if d not in seen:
-                    seen.append(d)
-        return sorted(seen)
+        return sorted({d for r in rows for d in r["descriptions"]})
 
     def nodes_count(self, node_type: str | None = None) -> int:
         """Tool 6."""
+        if self._index is not None:
+            ix = self._index
+            return ix.total if node_type is None else ix.type_counts.get(node_type, 0)
         df = self.nodes
         if node_type is not None:
             df = df.where(F.col("node_type") == node_type)
@@ -132,7 +389,16 @@ class DatacapsuleAPI:
         react_tools.py:313-316 — deliberate fix), return top_k."""
         if self.embeddings is None:
             raise ValueError("no embeddings table attached")
-        q = hash_embed_text(query_text, dim=len(self.embeddings.first()["embedding"]))
+        ix = self._index
+        if ix is not None and ix.emb is not None:
+            q = hash_embed_text(query_text, dim=ix.emb["mat"].shape[1])
+            return ix.vector(q, node_type, top_k, better_than_threshold)
+        if self._dim is None:
+            first = self.embeddings.select("embedding").first()
+            if first is None:  # empty table: nothing can match
+                return []
+            self._dim = len(first["embedding"])
+        q = hash_embed_text(query_text, dim=self._dim)
         rows = cosine_topk(
             self.embeddings, q, k=top_k, entity_type=node_type,
             threshold=better_than_threshold,
@@ -148,18 +414,34 @@ class DatacapsuleAPI:
     def query_database(self, sql: str) -> dict:
         """S5/X4 contract: execute (possibly LLM-generated) SQL against
         the registered tables; same fence-strip (dspy_query_db.py:
-        117-120) and result envelope (:141-158) as the reference."""
+        117-120) and result envelope (:141-158) as the reference.
+
+        The SparkSession is shared by every client, so only a read-only
+        query (SELECT / WITH / VALUES / TABLE, per the session's own
+        parser) runs: a SET, CACHE TABLE, DROP VIEW, CREATE or INSERT
+        comes back as an error envelope without executing. At most
+        MAX_SQL_ROWS rows are collected; a cut result carries
+        "truncated": True."""
         cleaned = re.sub(r"```sql\s*", "", sql)
         cleaned = re.sub(r"```\s*$", "", cleaned.strip())
         try:
-            df = self.spark.sql(cleaned)
-            results = [r.asDict(recursive=True) for r in df.collect()]
-            return {
+            stmt = cleaned.rstrip().rstrip(";")
+            parse = self.spark._jsparkSession.sessionState().sqlParser().parseQuery
+            try:
+                capture_sql_exception(parse)(stmt)
+            except ParseException as e:
+                raise ValueError(f"only a single read-only query is allowed: {e}") from e
+            rows = self.spark.sql(stmt).limit(MAX_SQL_ROWS + 1).collect()
+            results = [r.asDict(recursive=True) for r in rows[:MAX_SQL_ROWS]]
+            env = {
                 "success": True,
                 "generated_sql": cleaned,
                 "results": results,
                 "row_count": len(results),
             }
+            if len(rows) > MAX_SQL_ROWS:
+                env["truncated"] = True
+            return env
         except Exception as e:  # noqa: BLE001 — envelope contract
             return {"success": False, "generated_sql": cleaned, "error": str(e)}
 
@@ -203,31 +485,40 @@ class DatacapsuleAPI:
         app.py:253-275 — O(store) a write); here each record is its own
         JSON file keyed by record id (duplicate id → False, mirroring
         save_to_db's 400, app.py:285-291), so saves are O(record),
-        atomic, and the directory loads straight into a DataFrame."""
-        import json
-        import os
+        atomic, and the directory loads straight into a DataFrame.
 
+        Safe under concurrent savers: the record is written to a temp
+        file of its own, then published with os.link, which fails if the
+        target exists. A lost race on an explicit id returns False; an
+        auto id moves on to the next free rec-N."""
         os.makedirs(save_dir, exist_ok=True)
-        if "id" in record and record["id"] is not None:  # 0 is a valid id
-            rid = str(record["id"])
-        else:
-            # next free index: max existing rec-N + 1 (len() would
-            # collide after deletes and count leftover .tmp files)
-            taken = [
-                int(f[4:-5])
-                for f in os.listdir(save_dir)
-                if f.startswith("rec-") and f.endswith(".json")
-                and f[4:-5].isdigit()
-            ]
-            rid = f"rec-{max(taken, default=-1) + 1}"
-        path = os.path.join(save_dir, f"{rid}.json")
-        if os.path.exists(path):
-            return False
-        tmp = f"{path}.tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump({**record, "id": rid}, f, ensure_ascii=False)
-        os.rename(tmp, path)
-        return True
+        explicit = record.get("id") is not None  # 0 is a valid id
+        fd, tmp = tempfile.mkstemp(dir=save_dir, prefix=".save-", suffix=".tmp")
+        os.close(fd)
+        try:
+            while True:
+                if explicit:
+                    rid = str(record["id"])
+                else:
+                    # next free index: max existing rec-N + 1 (len() would
+                    # collide after deletes and count leftover .tmp files)
+                    taken = [
+                        int(f[4:-5])
+                        for f in os.listdir(save_dir)
+                        if f.startswith("rec-") and f.endswith(".json")
+                        and f[4:-5].isdigit()
+                    ]
+                    rid = f"rec-{max(taken, default=-1) + 1}"
+                with open(tmp, "w", encoding="utf-8") as f:
+                    json.dump({**record, "id": rid}, f, ensure_ascii=False)
+                try:
+                    os.link(tmp, os.path.join(save_dir, f"{rid}.json"))
+                    return True
+                except FileExistsError:
+                    if explicit:
+                        return False
+        finally:
+            os.unlink(tmp)
 
     def load_interactions(self, save_dir: str) -> DataFrame:
         """Read every saved interaction back as a DataFrame (the ops

@@ -189,3 +189,120 @@ def test_save_interaction_id_edge_cases(spark, tmp_path):
     assert names == ["0.json", "rec-0.json", "rec-1.json"]
     rows = api.load_interactions(d)
     assert rows.count() == 3  # .tmp never loaded
+
+
+@pytest.mark.parametrize("explicit", [False, True], ids=["auto_id", "same_id"])
+def test_concurrent_saves_never_lose_a_record(tmp_path, monkeypatch, explicit):
+    """Two savers that both chose their id before either publishes (held
+    at a barrier in the publishing call): auto ids must both land under
+    different names; the same explicit id must land exactly once."""
+    import json
+    import os
+    import threading
+
+    from datacapsule_spark.api import DatacapsuleAPI
+
+    api = DatacapsuleAPI.__new__(DatacapsuleAPI)
+    d = str(tmp_path / "saves")
+    os.makedirs(d)
+    barrier = threading.Barrier(2)
+    held: set[int] = set()
+
+    def at_barrier(publish):
+        def call(*args, **kwargs):
+            if threading.get_ident() not in held:  # first publish of each thread
+                held.add(threading.get_ident())
+                barrier.wait(timeout=10)
+            return publish(*args, **kwargs)
+        return call
+
+    for name in ("link", "rename", "replace"):
+        monkeypatch.setattr(os, name, at_barrier(getattr(os, name)))
+    results: dict[int, object] = {}
+
+    def save(i):
+        rec = {"id": "same", "who": i} if explicit else {"who": i}
+        try:
+            results[i] = api.save_interaction(rec, d)
+        except Exception as e:  # noqa: BLE001 — reported by the asserts
+            results[i] = e
+
+    threads = [threading.Thread(target=save, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    saved = sorted(f for f in os.listdir(d) if f.endswith(".json"))
+    whos = sorted(json.load(open(os.path.join(d, f)))["who"] for f in saved)
+    if explicit:
+        assert sorted(results.values(), key=str) == [False, True]
+        assert saved == ["same.json"] and len(whos) == 1
+    else:
+        assert results == {0: True, 1: True}
+        assert saved == ["rec-0.json", "rec-1.json"] and whos == [0, 1]
+    assert sorted(os.listdir(d)) == saved  # no temp file left behind
+
+
+@pytest.mark.parametrize("stmt", [
+    "SET spark.sql.shuffle.partitions=3",
+    "CACHE TABLE guard_view",
+    "DROP VIEW guard_view",
+    "CREATE TEMPORARY VIEW guard_new AS SELECT 1 AS x",
+    "INSERT INTO guard_view SELECT 1",
+    "SELECT 1; SET spark.sql.shuffle.partitions=3",
+])
+def test_query_database_refuses_non_queries(spark, api, stmt):
+    """The SQL tool shares the SparkSession with every client: a statement
+    that is not a read-only query is refused before it runs."""
+    api.register_tables({"guard_view": spark.range(2)})
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    env = api.query_database(stmt)
+    assert not env["success"] and "read-only" in env["error"]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.catalog.tableExists("guard_view")
+    assert not spark.catalog.isCached("guard_view")
+    assert not spark.catalog.tableExists("guard_new")
+    ok = api.query_database("```sql\nSELECT COUNT(*) AS n FROM guard_view;\n```")
+    assert ok["success"] and ok["results"] == [{"n": 2}] and "truncated" not in ok
+
+
+def test_query_database_caps_rows(api):
+    from datacapsule_spark.api import MAX_SQL_ROWS
+
+    env = api.query_database(f"SELECT id FROM range({MAX_SQL_ROWS + 5}) ORDER BY id DESC")
+    assert env["success"] and env["truncated"] is True
+    assert env["row_count"] == len(env["results"]) == MAX_SQL_ROWS
+    assert env["results"][0] == {"id": MAX_SQL_ROWS + 4}
+
+
+def test_save_interaction_stress(tmp_path):
+    """More savers than cores, with a short switch interval: every auto-id
+    save lands in its own file."""
+    import os
+    import sys
+    import threading
+
+    from datacapsule_spark.api import DatacapsuleAPI
+
+    api = DatacapsuleAPI.__new__(DatacapsuleAPI)
+    d = str(tmp_path / "stress")
+    n_threads, per_thread = 2 * (os.cpu_count() or 2), 10
+    ok: list[bool] = []
+
+    def save(i):
+        for j in range(per_thread):
+            ok.append(api.save_interaction({"who": f"{i}-{j}"}, d))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=save, args=(i,)) for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert ok == [True] * (n_threads * per_thread)
+    assert len(os.listdir(d)) == n_threads * per_thread  # no record lost, no temp left
