@@ -1,9 +1,16 @@
-"""A/B harness for post-extraction I/O knobs (r02 VERDICT item 4).
+"""A/B harness for session-wide post-extraction I/O knobs.
 
 Runs bench/scaling.py --level <cpus> once per variant per repetition,
 alternating variants within each rep so host drift hits all of them.
 Each run is a fresh JVM subprocess. Prints one JSON line per run and a
 best-of summary. NEVER run anything else while this measures.
+
+A variant is a set of environment overrides; codec A/Bs go through
+SPARK_GRAFT_EXTRA_CONF, which applies to the whole session. The
+per-boundary canonical-parquet codec variants (v2_canon_zstd, v3_both)
+are gone: that A/B was decided for the shipped snappy default (table
+in bench/BASELINE.md) and the pipeline no longer takes a per-boundary
+codec.
 
     python bench/ab_canon.py --level 16 --repeats 2
 """
@@ -21,11 +28,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 VARIANTS = {
     "v0_base": {},
     "v1_shuffle_zstd": {"SPARK_GRAFT_EXTRA_CONF": "spark.io.compression.codec=zstd"},
-    "v2_canon_zstd": {"SPARK_GRAFT_CANON_CODEC": "zstd"},
-    "v3_both": {
-        "SPARK_GRAFT_EXTRA_CONF": "spark.io.compression.codec=zstd",
-        "SPARK_GRAFT_CANON_CODEC": "zstd",
-    },
 }
 
 

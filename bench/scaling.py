@@ -66,14 +66,11 @@ def run_level(cpus: int, corpus: str) -> dict:
     # this boundary instead of re-extracting (markers validate params)
     params = pipeline_params(repos)
     t0 = time.time()
-    from datacapsule_spark.extraction_schema import ALL_PREDICATES
-
     tracker.materialize(
         "10_extract",
         lambda: extract_triples(repos),
         partition_by=["pred"],
         params=params["10_extract"],
-        partition_cardinality=len(ALL_PREDICATES),
     )
     extract_wall = time.time() - t0
     n_triples = tracker.load("10_extract").count()

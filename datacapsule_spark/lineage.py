@@ -4,8 +4,21 @@ Maps the reference's ops tables (interactions.processingTime etc.,
 app.py:71-94) to what the north rule actually needs at scale: every
 pipeline stage appends one row per partition with input/output counts
 and wall time, and a completed-stage marker. Resume = skip stages whose
-marker exists and whose output parquet is readable; mid-pipeline resume
-re-reads the stage boundary instead of recomputing upstream.
+marker is valid; mid-pipeline resume re-reads the stage boundary
+instead of recomputing upstream.
+
+A stage boundary is `<work_dir>/stage_<stage>/` holding
+  data/           the parquet output (partitioned when partition_by is set)
+  lineage.jsonl   one row per written file with its footer row count
+  _STAGE_DONE     the completion marker, published last by atomic rename:
+                  run_id, params_hash, wall_ms, schema (the output's
+                  StructType JSON), partition_by (list) and version.
+
+The marker is the one contract for reading a boundary back: `load`
+reads data/ with the marker's schema (partition columns last), so an
+empty boundary and a non-empty one come back alike and no read infers
+a schema. A marker whose `version` is not STAGE_VERSION (every marker an
+older engine wrote) never resumes: the stage re-runs.
 
 At 10^12 files the same mechanism keys on (run_id, stage,
 partition_id) with MERGE INTO on an Iceberg lineage table; here the
@@ -21,6 +34,13 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# Bump when what a boundary holds or how it is laid out changes: markers
+# carrying another version (markers without one count as version 1) are
+# never resumed.
+STAGE_VERSION = 2
 
 
 def params_hash(params: dict | None) -> str:
@@ -31,10 +51,12 @@ def params_hash(params: dict | None) -> str:
 
 
 def input_signature(df: DataFrame, max_files: int = 1000) -> dict:
-    """Cheap identity of a source DataFrame for checkpoint keying:
-    column names plus a hash of its (bounded) input file list. File
-    listing is scan metadata, no data read; non-file sources (in-memory
-    test DataFrames) degrade to schema-only."""
+    """Identity of a source DataFrame for checkpoint keying: column
+    names plus a hash of its (bounded) input file list — scan metadata,
+    no data read. A frame with no input files (in-memory, checkpointed)
+    is keyed by content instead: an order-insensitive xxhash64 checksum
+    and the row count (one aggregation job), so two different in-memory
+    corpora never share a key."""
     sig: dict = {"columns": list(df.columns)}
     try:
         files = sorted(df.inputFiles())
@@ -45,17 +67,25 @@ def input_signature(df: DataFrame, max_files: int = 1000) -> dict:
         sig["files_md5"] = hashlib.md5(
             "\n".join(files[:max_files]).encode()
         ).hexdigest()
+    else:
+        row = df.select(  # bit_xor: order-insensitive, no overflow
+            F.bit_xor(F.xxhash64(*df.columns)).alias("h"),
+            F.count("*").alias("n"),
+        ).collect()[0]
+        sig["content_xxh"] = [row["h"], row["n"]]
     return sig
 
 
 class StageTracker:
     """Stage-boundary checkpointing with per-partition metrics.
 
-    A stage is resumable only if its completion marker records the SAME
-    run_id and the SAME params hash as the current invocation — a rerun
-    with a different --run-id or toggled pipeline flags (dedup_files,
-    min_code_quality, different input) re-executes instead of silently
-    returning the stale boundary (ADVICE r01)."""
+    A stage is resumable only if its completion marker records
+    STAGE_VERSION, the SAME run_id and the SAME params hash as the
+    current invocation — a rerun with a different --run-id, toggled
+    pipeline flags (dedup_files, min_code_quality, different input) or
+    a marker from an older engine re-executes instead of silently
+    returning a stale boundary. Every boundary, empty or not, is read
+    back with the schema its marker records."""
 
     def __init__(self, spark: SparkSession, work_dir: str, run_id: str = "run0"):
         self.spark = spark
@@ -69,56 +99,42 @@ class StageTracker:
     def _marker(self, stage: str) -> str:
         return os.path.join(self._stage_dir(stage), "_STAGE_DONE")
 
-    def is_done(self, stage: str, params: dict | None = None) -> bool:
-        """Marker exists AND belongs to this run_id; when `params` is
-        given, its hash must match the recorded one too."""
-        marker = self._marker(stage)
-        if not os.path.exists(marker):
-            return False
+    def _meta(self, stage: str) -> dict | None:
+        """The parsed completion marker, or None when absent or torn."""
         try:
-            with open(marker) as f:
-                meta = json.load(f)
+            with open(self._marker(stage)) as f:
+                return json.load(f)
         except (OSError, ValueError):
-            return False
-        if meta.get("run_id") != self.run_id:
-            return False
-        if params is not None and meta.get("params_hash") != params_hash(params):
-            return False
-        return True
+            return None
 
-    def _boundary_files(self, stage: str) -> list[str]:
-        out = os.path.join(self._stage_dir(stage), "data")
-        found = []
-        for root, _dirs, files in os.walk(out):
-            found.extend(
-                os.path.join(root, f) for f in files if f.endswith(".parquet")
-            )
-        return found
+    def is_done(self, stage: str, params: dict | None = None) -> bool:
+        """Marker exists, carries STAGE_VERSION AND belongs to this
+        run_id; when `params` is given, its hash must match too."""
+        meta = self._meta(stage)
+        return (
+            meta is not None
+            and meta.get("version") == STAGE_VERSION
+            and meta.get("run_id") == self.run_id
+            and (params is None or meta.get("params_hash") == params_hash(params))
+        )
 
     def load(self, stage: str) -> DataFrame:
-        """Read a stage boundary back. A stage whose output was EMPTY
-        (e.g. a fully quality-gated delta) wrote no parquet files —
-        partitioned writes of zero rows emit only _SUCCESS — so the
-        schema recorded in its completion marker reconstructs the empty
-        DataFrame instead of failing UNABLE_TO_INFER_SCHEMA."""
-        if self._boundary_files(stage):
-            return self.spark.read.parquet(
-                os.path.join(self._stage_dir(stage), "data")
-            )
-        from pyspark.sql.types import StructType
-
-        with open(self._marker(stage)) as f:
-            meta = json.load(f)
-        schema_json = meta.get("schema")
-        if schema_json is None:
-            raise RuntimeError(
-                f"stage '{stage}' boundary is empty and its completion "
-                "marker predates schema recording (written by an older "
-                "engine version); invalidate the stage or re-run with a "
-                "fresh run_id/work_dir to rebuild it"
-            )
-        schema = StructType.fromJson(json.loads(schema_json))
-        return self.spark.createDataFrame([], schema)
+        """Read a stage boundary back with the schema its marker records,
+        partition columns last — no schema inference, no Spark job. An
+        EMPTY boundary (a partitioned write of zero rows emits no parquet
+        file) reads the same way and returns the same columns."""
+        meta = self._meta(stage)
+        if meta is None:
+            raise FileNotFoundError(f"stage '{stage}' has no completion marker")
+        schema = StructType.fromJson(json.loads(meta["schema"]))
+        part = meta["partition_by"]
+        schema = StructType(
+            [f for f in schema.fields if f.name not in part]
+            + [schema[c] for c in part]
+        )
+        return self.spark.read.schema(schema).parquet(
+            os.path.join(self._stage_dir(stage), "data")
+        )
 
     def materialize(
         self,
@@ -126,30 +142,19 @@ class StageTracker:
         df_thunk,
         partition_by: list[str] | None = None,
         params: dict | None = None,
-        compression: str | None = None,
-        partition_cardinality: int | None = None,
     ) -> DataFrame:
         """Run `df_thunk()` and persist its result as the stage boundary,
         unless the stage already completed (resume path) under the same
         run_id + params. Per-partition lineage comes from the written
-        parquet footers (no data scan). `compression` overrides the
-        session parquet codec for THIS boundary only — boundaries on the
-        disk-bound side of the pipeline trade codec CPU for I/O bytes
-        differently than CPU-bound ones (measured in bench/BASELINE.md).
+        parquet footers (no data scan).
 
-        `partition_cardinality`: declare the (approximate) number of
-        distinct partition_by values when the caller knows it. When it
-        is small (<= 32), the write skips Spark's planned-write
-        per-task sort by the partition columns and uses concurrent
-        output writers instead — every task can hold all partitions'
-        files open at once, so sorting the rows first buys nothing.
-        A/B (bench/ab_boundary_write.py, 29.6M-row pred-partitioned
-        boundary at local[16], fresh JVMs, 3 alternating reps):
-        concurrent beat the planned sort in every within-rep pair,
-        best-of-3 28.9s vs 37.5s. High-cardinality partitioning keeps
-        the default sort path — each open parquet writer buffers a row
-        group, so unbounded concurrent writers trade sort CPU for
-        executor memory.
+        A partitioned write holds one open file per partition value in
+        each task instead of Spark's planned-write per-task sort by the
+        partition columns (A/B in bench/BASELINE.md: best-of-3 28.9 s vs
+        37.5 s on a 29.6M-row pred-partitioned boundary). Past 32 open
+        writers Spark itself sorts the rest of the task's rows and
+        writes them in order, so memory stays bounded. The session conf
+        is restored afterwards.
         """
         if self.is_done(stage, params=params):
             return self.load(stage)
@@ -161,14 +166,9 @@ class StageTracker:
         df = df_thunk()
         out = os.path.join(self._stage_dir(stage), "data")
 
-        concurrent = (
-            partition_by
-            and partition_cardinality is not None
-            and partition_cardinality <= 32
-        )
         conf = self.spark.conf
         saved: dict[str, str | None] = {}
-        if concurrent:
+        if partition_by:
             for key, val in (
                 ("spark.sql.optimizer.plannedWrite.enabled", "false"),
                 ("spark.sql.maxConcurrentOutputFileWriters", "32"),
@@ -182,8 +182,6 @@ class StageTracker:
             writer = df.write.mode("overwrite")
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
-            if compression:
-                writer = writer.option("compression", compression)
             writer.parquet(out)
         finally:
             for key, old in saved.items():
@@ -233,9 +231,7 @@ class StageTracker:
             for row in lineage_rows:
                 f.write(json.dumps(row) + "\n")
         # atomic completion marker — written last, so a killed run
-        # re-executes the stage (exactly-once at stage granularity);
-        # records run_id + params hash so a changed configuration
-        # against the same work_dir invalidates instead of resuming.
+        # re-executes the stage (exactly-once at stage granularity).
         # Temp file + rename: a crash mid-write never leaves a torn marker.
         tmp = self._marker(stage) + ".tmp"
         with open(tmp, "w") as f:
@@ -245,9 +241,9 @@ class StageTracker:
                         "run_id": self.run_id,
                         "params_hash": params_hash(params),
                         "wall_ms": wall_ms,
-                        # lets load() rebuild an EMPTY boundary (zero
-                        # parquet files) without schema inference
                         "schema": df.schema.json(),
+                        "partition_by": list(partition_by or []),
+                        "version": STAGE_VERSION,
                     }
                 )
             )

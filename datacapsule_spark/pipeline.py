@@ -22,8 +22,7 @@ from pyspark.sql import functions as F
 
 from .canonicalize import connected_components
 from .extract import extract_triples
-from .extraction_schema import ALL_PREDICATES
-from .lineage import StageTracker, input_signature
+from .lineage import StageTracker, input_signature, params_hash
 from .linking import alias_pairs
 from .materialize import (
     build_edges,
@@ -142,7 +141,6 @@ def run_pipeline(
         lambda: extract_triples(source),
         partition_by=["pred"],
         params=params["10_extract"],
-        partition_cardinality=len(ALL_PREDICATES),
     )
     return _downstream(tracker, triples, params["downstream"])
 
@@ -190,8 +188,6 @@ def _downstream(
     # that stop compressing once shuffled — with the in-partition
     # re-sort this measured 4x on boundary size (1.7 GB -> ~0.4 GB at
     # 29.6M triples).
-    import os as _os
-
     canon_triples = tracker.materialize(
         "40_canon_edges",
         lambda: canonical_edges(
@@ -199,8 +195,6 @@ def _downstream(
         ),
         partition_by=["pred"],
         params=down,
-        compression=_os.environ.get("SPARK_GRAFT_CANON_CODEC") or None,
-        partition_cardinality=len(ALL_PREDICATES),
     )
 
     # lazy projection of the 40 boundary — already distinct on
@@ -279,14 +273,12 @@ def run_incremental(
     (run the base with dedup_files/dedup_near); min_code_quality
     composes per file and is applied to the delta here.
 
-    Delta identity: input_signature, augmented for non-file-backed
-    frames (whose signature is schema-only) with an order-insensitive
-    xxhash64 content checksum — two different in-memory deltas never
-    collide on the stage key.
+    Delta identity: input_signature (input files, or a content
+    checksum for in-memory frames) — two different in-memory deltas
+    never collide on the stage key.
 
     Tested equal to a from-scratch run_pipeline over old ∪ new,
     including an updated-file delta."""
-    import json
     import os
 
     tracker = StageTracker(spark, work_dir, run_id)
@@ -294,16 +286,7 @@ def run_incremental(
         raise RuntimeError(
             "no completed base extract in work_dir — run run_pipeline first"
         )
-    from .lineage import input_signature, params_hash
-
-    ident = input_signature(new_repos)
-    if "files_md5" not in ident:
-        row = new_repos.select(  # bit_xor: order-insensitive, no overflow
-            F.bit_xor(F.xxhash64(*new_repos.columns)).alias("h"),
-            F.count("*").alias("n"),
-        ).collect()[0]
-        ident["content_xxh"] = [row["h"], row["n"]]
-    sig = params_hash(ident)[:12]
+    sig = params_hash(input_signature(new_repos))[:12]
 
     existing = sorted(
         d for d in os.listdir(work_dir) if d.startswith("stage_15_delta_")
@@ -324,7 +307,6 @@ def run_incremental(
         lambda: extract_triples(source),
         partition_by=["pred"],
         params={"delta": sig, "min_code_quality": min_code_quality},
-        partition_cardinality=len(ALL_PREDICATES),
     )
 
     deltas = sorted(  # zero-padded <seq> makes name order = ingest order
@@ -344,10 +326,8 @@ def run_incremental(
         )
         seen = seen.unionByName(df.select("repo", "path")).distinct()
 
-    with open(tracker._marker("10_extract")) as f:
-        base_hash = json.load(f).get("params_hash")
     down = {
-        "base": base_hash,
+        "base": tracker._meta("10_extract")["params_hash"],
         "deltas": deltas,
         # must invalidate downstream when the gate moves, even though the
         # delta boundary names are unchanged (the re-extracted boundary's
