@@ -3,7 +3,7 @@
 From-scratch reimplementation of the capabilities of loukie7/Datacapsule
 (reference at /root/reference, read-only) as idiomatic, distributed Spark
 dataflow: schema-guided triple extraction over a source-code corpus,
-entity linking (MinHash-LSH + cosine), connected-components
+entity linking (normal form + exact 3-gram Jaccard join), connected-components
 canonicalization, graph + relational materialization, vector search, and
 rank-constrained graph traversal.
 

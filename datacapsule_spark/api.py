@@ -63,6 +63,7 @@ from pyspark.errors.exceptions.captured import capture_sql_exception
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .canonicalize import collect_capped
 from .traverse import NODE_HIERARCHY
 from .traverse import find_nodes_by_node_type as _bfs
 from .traverse import get_adjacent_descriptions
@@ -76,17 +77,6 @@ DRIVER_THRESHOLD = 500_000
 # query_database collects at most this many rows ("truncated": True beyond).
 MAX_SQL_ROWS = 10_000
 MAX_HOPS = 7  # traverse.find_nodes_by_node_type's default
-
-
-def _collect_capped(df: DataFrame, cap: int, arrow: bool = False):
-    """All rows of df (a pandas frame when ``arrow``), or None when it has
-    more than ``cap``: the limit rides on the collect itself, so sizing
-    the tier costs no counting pass."""
-    if cap <= 0:
-        return None
-    capped = df.limit(cap + 1)
-    rows = capped.toPandas() if arrow else capped.collect()
-    return None if len(rows) > cap else rows
 
 
 def _segments(ptr: np.ndarray, sel: np.ndarray):
@@ -161,7 +151,7 @@ class _ServingIndex:
         if self._adj is None:
             with self._lock:
                 if self._adj is None:
-                    e = _collect_capped(edges.select("src", "dst"), cap, arrow=True)
+                    e = collect_capped(edges.select("src", "dst"), cap, arrow=True)
                     self._adj = False if e is None else self._build_adjacency(
                         e["src"].to_numpy(dtype=object), e["dst"].to_numpy(dtype=object))
         return self._adj or None
@@ -286,10 +276,10 @@ class DatacapsuleAPI:
         # call (_graph). Otherwise every tool runs on Spark over the
         # cached tables, mirroring the reference's in-RAM load
         # (react_tools.py:45-65) but distributed.
-        rows = _collect_capped(nodes, driver_threshold)
+        rows = collect_capped(nodes, driver_threshold)
         emb = None
         if rows is not None and embeddings is not None:
-            emb = _collect_capped(
+            emb = collect_capped(
                 embeddings.select("id", "entity_type", "name", "embedding"),
                 driver_threshold, arrow=True)
         self._index = None if rows is None else _ServingIndex(

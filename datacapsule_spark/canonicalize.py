@@ -12,16 +12,32 @@ tools/entity_extraction.py:93-133) with true distributed
 canonicalization: alias pairs from linking.py become edges; each
 connected component collapses to `min(node_id)` as canonical_id.
 
-Scale notes: each round is two self-joins + groupBys on (src,dst) —
-all shuffle-partitioned by key, no driver materialization except the
-O(1) convergence counter. Star-graph skew (one canonical id with 10^8
-aliases) is exactly what large-star alternation bounds.
+Scale notes: one capped collect (`collect_capped`, shared with the
+serving index in api.py) picks the tier: an edge list of at most
+`driver_threshold` rows is closed by driver union-find, a larger one by
+the distributed loop. There each round is two self-joins + groupBys on
+(src,dst) — all shuffle-partitioned by key, no driver materialization
+except the O(1) convergence probe. Star-graph skew (one canonical id
+with 10^8 aliases) is exactly what large-star alternation bounds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+
+def collect_capped(df: DataFrame, cap: int, arrow: bool = False):
+    """All rows of df (a pandas frame when ``arrow``), or None when it has
+    more than ``cap``: the limit rides on the collect itself, so sizing
+    the tier costs no counting pass. This is the one driver/Spark tier
+    gate (here and in api)."""
+    if cap <= 0:
+        return None
+    capped = df.limit(cap + 1)
+    rows = capped.toPandas() if arrow else capped.collect()
+    return None if len(rows) > cap else rows
 
 
 def connected_components(
@@ -33,23 +49,28 @@ def connected_components(
 ) -> DataFrame:
     """edges(a, b) undirected → (node_id, canonical_id) mapping.
 
-    canonical_id = min node id (lexicographic) in the component.
-    Deterministic; idempotent (CC∘CC = CC) — property-tested against
-    a union-find oracle in tests/test_canonicalize.py.
+    canonical_id = min node id (lexicographic) in the component; the
+    mapping's id dtype is the input's. Deterministic; idempotent
+    (CC∘CC = CC) — property-tested against a union-find oracle in
+    tests/test_canonicalize.py.
 
-    Two execution paths, same semantics (equivalence-tested):
+    Two execution paths, same semantics (equivalence-tested), chosen by
+    one capped collect of the deduped edges (``collect_capped``):
 
-    - edge count ≤ driver_threshold: driver-side union-find. The CC
-      input here is the ALIAS-PAIR dictionary — O(distinct linked
-      names), orders of magnitude smaller than the corpus — and below
-      ~10^6 pairs the distributed loop's cost is pure scheduling
-      latency (each round is 4+ tiny jobs; measured ~60-70s of fixed
-      wall per pipeline run at ANY parallelism, the dominant term in
-      full-pipeline scaling). Union-find on the driver is O(E α(E))
-      and milliseconds at that size.
-    - above the threshold: the alternating large-star/small-star loop
-      below — the path a 10^9-name vocabulary takes on a real cluster,
-      where each round's shuffles scale with executors.
+    - at most driver_threshold edges: driver-side union-find over the
+      collected rows. The CC input here is the ALIAS-PAIR dictionary —
+      O(distinct linked names), orders of magnitude smaller than the
+      corpus — and below ~10^6 pairs the distributed loop's cost is pure
+      scheduling latency (each round is 4+ tiny jobs; measured ~60-70s
+      of fixed wall per pipeline run at ANY parallelism, the dominant
+      term in full-pipeline scaling). Union-find on the driver is
+      O(E α(E)) and milliseconds at that size. An empty input is just
+      zero rows here.
+    - more (or driver_threshold=0): the alternating large-star/small-star
+      loop below — the path a 10^9-name vocabulary takes on a real
+      cluster, where each round's shuffles scale with executors. It
+      raises RuntimeError rather than return a mapping that has not
+      converged within max_iter rounds.
     """
     spark = edges.sparkSession
     # undirected, deduped edge list; drop self-loops
@@ -57,22 +78,15 @@ def connected_components(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-    )
-    # materialize BEFORE the emptiness probe: isEmpty() executes the
-    # full upstream lineage (e.g. near_dedup's minhash→band→jaccard
-    # chain), so probing first and checkpointing after ran that
-    # lineage twice per CC call. Unconditional since r07: with
-    # driver_threshold=0 the distributed loop's round 1 otherwise
-    # re-executes the upstream lineage FIVE times (isEmpty, twice in
-    # nbrs, twice in the convergence check).
-    e = e.localCheckpoint(eager=True)
-    if e.isEmpty():
-        return spark.createDataFrame([], "node_id string, canonical_id string")
-
-    if driver_threshold > 0:
-        # cheap gate on the materialized edges; reused by either path
-        if e.count() <= driver_threshold:
-            return _driver_union_find(spark, e)
+    ).localCheckpoint(eager=False)
+    # the lazy checkpoint runs the upstream lineage (e.g. near_dedup's
+    # minhash→band→jaccard chain) once for both the tier probe and the
+    # loop: the capped collect fills it, and above the limit round 1's
+    # four reads of e (twice in nbrs, twice in the convergence check)
+    # reuse it; an eager checkpoint after the probe would run it twice
+    rows = collect_capped(e, driver_threshold)
+    if rows is not None:
+        return _driver_union_find(spark, rows, e.schema["u"].dataType)
 
     for _ in range(max_iter):
         # --- large-star: for each u, attach all neighbors v with v > u
@@ -125,6 +139,11 @@ def connected_components(
         e = small
         if not delta:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds; "
+            "raise max_iter"
+        )
 
     # e now maps every non-root node to its component root
     mapping = e.select(
@@ -137,15 +156,15 @@ def connected_components(
     return mapping.union(roots).distinct()
 
 
-def _driver_union_find(spark, e: DataFrame) -> DataFrame:
-    """Exact union-find (union-by-min + path compression) over a
-    collected edge list — the small-dictionary fast path. Union always
+def _driver_union_find(spark, rows, id_type) -> DataFrame:
+    """Exact union-find (union-by-min + path compression) over collected
+    (u, v) edge rows — the small-dictionary fast path. Union always
     parents the larger root under the smaller, so every final root is
     its component's minimum id: identical output to the distributed
     loop (string order: Python code points ≡ Spark UTF8_BINARY)."""
-    parent: dict[str, str] = {}
+    parent: dict = {}
 
-    def find(x: str) -> str:
+    def find(x):
         root = x
         while parent.get(root, root) != root:
             root = parent[root]
@@ -153,35 +172,26 @@ def _driver_union_find(spark, e: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    # collect(), not toLocalIterator(): the fast path is gated at
-    # ≤ driver_threshold (1M) edges — comfortably driver-sized — and
-    # toLocalIterator pays one sequential job round-trip per partition
-    # (32 here) for data that arrives in one
-    for r in e.collect():
+    for r in rows:
         ra, rb = find(r["u"]), find(r["v"])
         if ra != rb:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
 
-    rows = [(n, find(n)) for n in parent] + [
+    out = [(n, find(n)) for n in parent] + [
         (root, root) for root in {find(n) for n in parent}
     ]
     # output schema mirrors the INPUT id dtype (string ids in the KG
-    # pipeline, bigint doc ids in near_dedup) — hardcoding string here
-    # made the mapping dtype depend on which side of driver_threshold
-    # the graph landed, and long-vs-string joins degrade via double
-    # casts above 2^53
-    from pyspark.sql.types import StructField, StructType
-
-    id_type = e.schema["u"].dataType
+    # pipeline, bigint doc ids in near_dedup): long-vs-string joins
+    # degrade via double casts above 2^53
     schema = StructType(
         [
             StructField("node_id", id_type, False),
             StructField("canonical_id", id_type, False),
         ]
     )
-    return spark.createDataFrame(sorted(set(rows)), schema)
+    return spark.createDataFrame(sorted(set(out)), schema)
 
 
 def apply_canonical(

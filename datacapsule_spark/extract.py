@@ -104,30 +104,21 @@ def salted_repartition(
     return salted
 
 
-def extract_triples(
-    repos: DataFrame, salt: bool = False, target_partitions: int | None = None
-) -> DataFrame:
+def extract_triples(repos: DataFrame) -> DataFrame:
     """repos(repo,path,commit,lang,content) → triples_raw DataFrame.
 
-    salt=False by default, deliberately: extraction is a stateless
-    1→N map, and scan splits are already size-bounded by
+    No repartition, deliberately: extraction is a stateless 1→N map,
+    and scan splits are already size-bounded by
     spark.sql.files.maxPartitionBytes — a hot repo cannot skew a task
     because tasks are cut by bytes, not by key. Key-level salting
     (salted_repartition) is for the SHUFFLE-keyed stages (repo-keyed
     aggregations, co-located joins), where one key really can pin a
-    reducer. Shuffling the whole corpus before a stateless map would
-    add a full write+read of the input for nothing. Set salt=True only
-    when the source layout concentrates single out-sized rows per
-    split (e.g. one-file-per-row ingest with multi-GB rows).
-
-    target_partitions: optional coalesce (no shuffle) of the scan.
-    Default None = leave the scan partitioning alone — a fresh-JVM
-    sweep at 16 cores / 400k files measured raw 64-split scan 33.9s
-    vs coalesce(16) 44.2s vs coalesce(32) 52.4s vs salted shuffle
-    53.3s: more waves of smaller tasks pipeline scan-decode, python
-    CPU and write phases better than few monolithic tasks.
+    reducer; shuffling the whole corpus before a stateless map would
+    add a full write+read of the input for nothing. Coalescing the scan
+    loses too: a fresh-JVM sweep at 16 cores / 400k files measured raw
+    64-split scan 33.9s vs coalesce(16) 44.2s vs coalesce(32) 52.4s vs
+    salted shuffle 53.3s — more waves of smaller tasks pipeline
+    scan-decode, python CPU and write phases better than few
+    monolithic tasks.
     """
-    df = salted_repartition(repos) if salt else repos
-    if target_partitions:
-        df = df.coalesce(target_partitions)
-    return df.mapInPandas(_extract_batches, schema=TRIPLES_RAW)
+    return repos.mapInPandas(_extract_batches, schema=TRIPLES_RAW)

@@ -31,6 +31,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,23 +51,35 @@ def params_hash(params: dict | None) -> str:
     ).hexdigest()
 
 
-def input_signature(df: DataFrame, max_files: int = 1000) -> dict:
-    """Identity of a source DataFrame for checkpoint keying: column
-    names plus a hash of its (bounded) input file list — scan metadata,
-    no data read. A frame with no input files (in-memory, checkpointed)
-    is keyed by content instead: an order-insensitive xxhash64 checksum
-    and the row count (one aggregation job), so two different in-memory
-    corpora never share a key."""
+def input_signature(df: DataFrame) -> dict:
+    """Identity of a source DataFrame for checkpoint keying: its column
+    names plus, for a file-backed frame, every input file's (path, size,
+    modification time) from the Hadoop FileSystem status (metadata only,
+    no data read) and the md5 of its analyzed plan with the
+    per-session expression ids (`#12`) stripped — so a rewrite in place
+    or a filter over the same files is a different input, while the same
+    read in a fresh process keys the same. (`semanticHash()` is not
+    stable across JVMs.) A frame with no input files (in-memory,
+    checkpointed) is keyed by content instead: an order-insensitive
+    xxhash64 checksum and the row count (one aggregation job), so two
+    different in-memory corpora never share a key."""
     sig: dict = {"columns": list(df.columns)}
     try:
         files = sorted(df.inputFiles())
     except Exception:
         files = []
     if files:
+        jvm = df.sparkSession._jvm
+        conf = df.sparkSession._jsc.hadoopConfiguration()
+        stats = []
+        for f in files:
+            path = jvm.org.apache.hadoop.fs.Path(f)
+            st = path.getFileSystem(conf).getFileStatus(path)
+            stats.append(f"{f}\t{st.getLen()}\t{st.getModificationTime()}")
         sig["n_files"] = len(files)
-        sig["files_md5"] = hashlib.md5(
-            "\n".join(files[:max_files]).encode()
-        ).hexdigest()
+        sig["files_md5"] = hashlib.md5("\n".join(stats).encode()).hexdigest()
+        plan = re.sub(r"#\d+", "", df._jdf.queryExecution().analyzed().toString())
+        sig["plan_md5"] = hashlib.md5(plan.encode()).hexdigest()
     else:
         row = df.select(  # bit_xor: order-insensitive, no overflow
             F.bit_xor(F.xxhash64(*df.columns)).alias("h"),

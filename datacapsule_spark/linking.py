@@ -14,10 +14,9 @@ Two-tier design, both fully distributed and both exact:
 2. **Fuzzy tier** (near-miss aliases): a prefix-filtered self-join over
    the character-3-gram sets of the normalized names (the filter-and-
    verify join of *Distributed Similarity Joins over Top-K Rankings*,
-   EDBT 2020). Every pair with gram-set Jaccard ≥ FUZZY_JACCARD is a
-   candidate — no recall loss, deterministic — and candidates are
-   re-scored (Jaccard or TF-IDF cosine) via DataFrame functions. Only
-   pairs sharing a prefix gram are ever formed, so cost is
+   EDBT 2020). Exactly the pairs with gram-set Jaccard ≥ LINK_JACCARD
+   are emitted, scored by that Jaccard — no recall loss, deterministic.
+   Only pairs sharing a prefix gram are ever formed, so cost is
    ~O(candidates), never O(n²).
 
 At 10^12-file scale the distinct-symbol dictionary is << corpus size
@@ -30,9 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Candidate cut of the fuzzy tier: every name pair whose 3-gram sets
-# have Jaccard >= FUZZY_JACCARD is re-scored.
-FUZZY_JACCARD = 0.6
+# The one threshold of the fuzzy tier: two names link iff their 3-gram
+# sets have Jaccard >= LINK_JACCARD.
+LINK_JACCARD = 0.7
 
 
 def normalize_name(col):
@@ -60,43 +59,24 @@ def exact_norm_alias_pairs(names: DataFrame, name_col: str = "name") -> DataFram
     )
 
 
-def fuzzy_alias_pairs(
-    names: DataFrame,
-    name_col: str = "name",
-    min_rescore: float = 0.7,
-    score_fn: str = "jaccard",
-) -> DataFrame:
+def fuzzy_alias_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
     """Near-duplicate alias pairs: an exact prefix-filter self-join over
-    the 3-gram sets of the normalized names, re-scored exactly.
+    the 3-gram sets of the normalized names.
 
-    Candidates are ALL pairs with gram-set Jaccard >= FUZZY_JACCARD.
-    Each name's distinct grams are ordered rarest-first (gram frequency
-    over the name dictionary, ties by gram); a pair with J >= t shares
-    at least ⌈t·|A|⌉ grams, so it shares one of A's first
+    Emits ALL pairs with gram-set Jaccard >= LINK_JACCARD, scored by that
+    Jaccard. Each name's distinct grams are ordered rarest-first (gram
+    frequency over the name dictionary, ties by gram); a pair with
+    J >= t shares at least ⌈t·|A|⌉ grams, so it shares one of A's first
     |A| − ⌈t·|A|⌉ + 1 grams (the prefix). The prefix grams are exploded
     and self-joined under the length filter t·|A| <= |B| <= |A|/t, and
     the exact array_intersect/array_union Jaccard verifies each pair.
+    Prefix, length filter and verification all derive from the one
+    threshold, so there is no separate candidate cut.
 
-    score_fn="jaccard" (default): exact 3-gram set Jaccard.
-    score_fn="tfidf_cosine": TF-IDF-weighted cosine over the gram sets
-    — each gram weighs by its smoothed idf from the NAME DICTIONARY
-    (rare grams dominate, so two long names sharing only ubiquitous
-    affixes like 'get'/'handler' score low where raw Jaccard would
-    over-link). Binary tf over distinct grams, so
-        cos(A, B) = Σ_{g∈A∩B} idf(g)² / (‖A‖ ‖B‖),
-        ‖X‖ = sqrt(Σ_{g∈X} idf(g)²).
-    Computed on CANDIDATES only: the pair set explodes its
-    intersection grams against the (dictionary-sized, broadcastable)
-    idf table; per-name norms come from one explode+join+groupBy over
-    the name dictionary — never the corpus.
-
-    Returns alias_pairs(a, b, score) with score ≥ min_rescore. Pairs
-    are emitted once (a < b).
+    Returns alias_pairs(a, b, score), each pair once (a < b).
     """
-    if score_fn not in ("jaccard", "tfidf_cosine"):
-        raise ValueError("score_fn must be 'jaccard' or 'tfidf_cosine'")
     # float slack: t·n must not round above an integer it equals
-    t = FUZZY_JACCARD - 1e-9
+    t = LINK_JACCARD - 1e-9
 
     n = (
         names.select(F.col(name_col).alias("name"))
@@ -108,7 +88,7 @@ def fuzzy_alias_pairs(
     grams = n.select("name", F.explode(F.array_distinct(F.expr(shingles))).alias("g"))
     freq = grams.groupBy("g").agg(F.count("*").alias("df"))
     # grams rarest-first per name; checkpointed (dictionary-sized) because
-    # both join sides and the re-score read it, each re-executing its plan
+    # both join sides read it, each re-executing its plan
     sets = (
         grams.join(freq, "g")
         .groupBy("name")
@@ -125,8 +105,9 @@ def fuzzy_alias_pairs(
         ).alias("p"),
     )
     A, B = prefix.alias("A"), prefix.alias("B")
-    jac = F.size(F.array_intersect("ga", "gb")) / F.size(F.array_union("ga", "gb"))
-    pairs = (
+    ga, gb = F.col("A.grams"), F.col("B.grams")
+    jac = F.size(F.array_intersect(ga, gb)) / F.size(F.array_union(ga, gb))
+    return (
         A.join(
             B,
             (F.col("A.p") == F.col("B.p"))
@@ -134,72 +115,20 @@ def fuzzy_alias_pairs(
             & (F.col("B.n") >= F.col("A.n") * t)
             & (F.col("A.n") >= F.col("B.n") * t),
         )
-        .select(
-            F.col("A.name").alias("a"),
-            F.col("B.name").alias("b"),
-            F.col("A.grams").alias("ga"),
-            F.col("B.grams").alias("gb"),
-        )
-        .where(jac >= FUZZY_JACCARD)
+        .select(F.col("A.name").alias("a"), F.col("B.name").alias("b"), jac.alias("score"))
+        .where(F.col("score") >= LINK_JACCARD)
         .dropDuplicates(["a", "b"])
     )
-    if score_fn == "jaccard":
-        return pairs.select("a", "b", jac.alias("score")).where(
-            F.col("score") >= min_rescore
-        )
-
-    # TF-IDF cosine: idf from the name dictionary's gram dfs
-    n_names = sets.count()
-    idf = freq.select(
-        "g", (F.log(F.lit(n_names + 1.0) / (F.col("df") + 1)) + 1).alias("idf")
-    ).localCheckpoint(eager=False)
-    norms = (
-        sets.select(F.col("name"), F.explode("grams").alias("g"))
-        .join(F.broadcast(idf), "g")
-        .groupBy("name")
-        .agg(F.sqrt(F.sum(F.col("idf") * F.col("idf"))).alias("nrm"))
-    )
-    # LEFT join + coalesce keeps zero-intersection candidates at
-    # score 0 — same pair set as the jaccard branch for any
-    # min_rescore (an empty intersection must not silently drop the
-    # pair before the score filter)
-    dots = (
-        pairs.select(
-            "a", "b", F.explode(F.array_intersect("ga", "gb")).alias("g")
-        )
-        .join(F.broadcast(idf), "g")
-        .groupBy("a", "b")
-        .agg(F.sum(F.col("idf") * F.col("idf")).alias("dot"))
-    )
-    base = pairs.select("a", "b")
-    na = norms.select(F.col("name").alias("a"), F.col("nrm").alias("na"))
-    nb = norms.select(F.col("name").alias("b"), F.col("nrm").alias("nb"))
-    rescored = (
-        base.join(dots, ["a", "b"], "left")
-        .join(na, "a")
-        .join(nb, "b")
-        .select(
-            "a",
-            "b",
-            (
-                F.coalesce("dot", F.lit(0.0)) / (F.col("na") * F.col("nb"))
-            ).alias("score"),
-        )
-    )
-    return rescored.where(F.col("score") >= min_rescore)
 
 
-def alias_pairs(
-    names: DataFrame, name_col: str = "name", score_fn: str = "jaccard"
-) -> DataFrame:
-    """Union of the exact-normal-form tier and the fuzzy tier; score_fn
-    selects the fuzzy tier's exact re-score (see fuzzy_alias_pairs).
+def alias_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
+    """Union of the exact-normal-form tier and the fuzzy tier.
     The deduped name dictionary is materialized ONCE here — `names` is
     typically a lazy view over a corpus-sized boundary, and each tier
     would otherwise re-run that scan + distinct."""
     n = names.select(F.col(name_col).alias("name")).distinct().localCheckpoint(eager=True)
     return (
         exact_norm_alias_pairs(n)
-        .unionByName(fuzzy_alias_pairs(n, score_fn=score_fn))
+        .unionByName(fuzzy_alias_pairs(n))
         .dropDuplicates(["a", "b"])
     )

@@ -19,22 +19,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def build_edges(triples: DataFrame, assume_unique: bool = False) -> DataFrame:
-    """Distinct (src, relation, dst) with first-seen provenance —
-    NetworkX add_edge overwrite semantics → dropDuplicates.
-
-    assume_unique=True skips the dedup shuffle when the input is
-    already distinct on (subj, pred, obj) — the pipeline's canonical
-    stage guarantees this, and re-deduplicating 10^10 rows is a full
-    shuffle bought for nothing (measured 14.3s of a 126s run)."""
-    out = triples.select(
+def build_edges(triples: DataFrame) -> DataFrame:
+    """(src, relation, dst) edges with provenance: a projection of the
+    canonical triples, which are already distinct on (subj, pred, obj)
+    — NetworkX add_edge overwrite semantics hold with no dedup shuffle
+    (re-deduplicating 10^10 rows measured 14.3s of a 126s run)."""
+    return triples.select(
         F.col("subj").alias("src"),
         F.col("pred").alias("relation"),
         F.col("obj").alias("dst"),
         "repo",
         "path",
     )
-    return out if assume_unique else out.dropDuplicates(["src", "relation", "dst"])
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:
@@ -118,19 +114,16 @@ def relation_histogram(edges: DataFrame) -> DataFrame:
 
 # ----------------------------------------------------------- relational
 
-def build_relational(
-    triples: DataFrame, assume_unique: bool = False
-) -> dict[str, DataFrame]:
-    """Pivot triples_raw into the 4-table schema of
+def build_relational(triples: DataFrame) -> dict[str, DataFrame]:
+    """Pivot canonical triples into the 4-table schema of
     tools/entity_extraction_db.py:85-137 (species→entities,
     distributions→entity_mentions, numerical_traits→numerical_facts,
     descriptions→descriptions).
 
-    assume_unique=True skips the mentions/descriptions dedup shuffles:
-    their projections are injective per (subj, pred, obj), so input
-    already distinct on the triple key (the pipeline's canonical
-    boundary) needs no re-dedup — measured 26s@4 / 13s@16 cores bought
-    back at 29.6M triples."""
+    The input must be distinct on (subj, pred, obj), as the pipeline's
+    canonical boundary is: the mentions/descriptions projections are
+    injective per triple, so they need no dedup shuffle (measured
+    26s@4 / 13s@16 cores bought back at 29.6M triples)."""
     files = triples.where(F.col("subj_type") == "file")
 
     # entities ≈ species: one row per file entity, with year/author attrs
@@ -187,8 +180,6 @@ def build_relational(
         "path",
         F.col("pred").alias("kind"),
     )
-    if not assume_unique:
-        mentions = mentions.distinct()
 
     # numerical_facts ≈ numerical_traits (REAL value + unit)
     facts = (
@@ -211,8 +202,6 @@ def build_relational(
         F.lit("raw_fallback").alias("description_type"),
         F.regexp_replace("obj", "^raw:", "").alias("content"),
     )
-    if not assume_unique:
-        descriptions = descriptions.distinct()
 
     return {
         "entities": entities,

@@ -1,6 +1,6 @@
 """End-to-end KG-construction pipeline (spark-submit entry point).
 
-scan → salted extraction → entity linking → CC canonicalization →
+scan → extraction → entity linking → CC canonicalization →
 graph + relational materialization, every stage checkpointed through
 StageTracker so a killed run resumes mid-pipeline (north rule).
 
@@ -9,8 +9,8 @@ Usage (cluster):
         --input <iceberg-or-parquet repos table> --output <warehouse dir>
 
 The DAG shape is identical at local[8] / local[32] / 1000 executors —
-the only knobs are spark.sql.shuffle.partitions and the salting bucket
-count, both surfaced as CLI args.
+the only knob is spark.sql.shuffle.partitions, surfaced as the
+--shuffle-partitions CLI arg.
 """
 
 from __future__ import annotations
@@ -200,7 +200,7 @@ def _downstream(
     # lazy projection of the 40 boundary — already distinct on
     # (src, relation, dst), no extra stage write (the old 60_edges
     # stage re-wrote and re-read the full triple stream for a rename)
-    edges = build_edges(canon_triples, assume_unique=True)
+    edges = build_edges(canon_triples)
 
     # nodes + the 4 relational tables are INDEPENDENT projections of
     # the (already materialized) 40 boundary with unpartitioned writes
@@ -211,7 +211,7 @@ def _downstream(
     # session conf in StageTracker.materialize.
     from concurrent.futures import ThreadPoolExecutor
 
-    rel = build_relational(canon_triples, assume_unique=True)
+    rel = build_relational(canon_triples)
     jobs = {"50_nodes": lambda: build_nodes(canon_triples)}
     jobs.update({
         f"70_rel_{name}": (lambda df=df: df) for name, df in rel.items()

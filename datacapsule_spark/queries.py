@@ -1732,7 +1732,7 @@ def kg_triples_documents(spark, sf_dir):
         F.coalesce(F.col("lang"), F.lit("text")).alias("lang"),
         F.col("text").alias("content"),
     )
-    return extract_triples(repos, salt=False).select("subj", "pred", "obj")
+    return extract_triples(repos).select("subj", "pred", "obj")
 
 
 def graph_bfs_customers_in_region(spark, sf_dir):

@@ -140,3 +140,67 @@ def test_cc_preserves_input_id_dtype(spark):
     as_set = lambda df: {(r["node_id"], r["canonical_id"]) for r in df.collect()}
     assert as_set(small) == as_set(big)
     assert (10, 10) in as_set(small) and (12, 10) in as_set(small)
+
+
+def test_cc_raises_when_not_converged(spark):
+    """The distributed loop never returns a half-closed mapping: an
+    11-node chain needs more than one round, so max_iter=1 must raise
+    (a silent return would map the chain to several 'canonical' ids)."""
+    e = spark.createDataFrame(CASES["chain"], "a string, b string")
+    with pytest.raises(RuntimeError, match="max_iter"):
+        connected_components(e, "a", "b", driver_threshold=0, max_iter=1)
+
+
+def test_cc_driver_tier_launches_at_most_two_jobs(spark):
+    """Below the limit the tier choice is the collect itself: one capped
+    collect of the deduped edges (its shuffle plus its result stage), no
+    emptiness probe, no count and no second collect."""
+    e = spark.createDataFrame(CASES["two_cliques_merged"], "a string, b string")
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-driver-tier", "cc job guard")
+    try:
+        mapping = connected_components(e, "a", "b")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-driver-tier")) <= 2
+    assert {r["canonical_id"] for r in mapping.collect()} == {"a1"}
+
+
+@pytest.mark.parametrize("threshold", [0, 1_000_000])
+def test_cc_empty_edges_keep_id_dtype(spark, threshold):
+    """No edges (or only self-loops) → an empty mapping in the input's id
+    dtype on both tiers."""
+    for rows in ([], [(7, 7)]):
+        e = spark.createDataFrame(rows, "a bigint, b bigint")
+        m = connected_components(e, "a", "b", driver_threshold=threshold)
+        assert dict(m.dtypes) == {"node_id": "bigint", "canonical_id": "bigint"}
+        assert m.collect() == []
+
+
+def test_cc_tier_limit_counts_deduped_edges(spark, monkeypatch):
+    """The limit is inclusive and counts distinct non-loop edges:
+    exactly t edges (here with a duplicate and a self-loop on top) take
+    the driver tier, t+1 the distributed loop, and both equal the
+    union-find oracle."""
+    import datacapsule_spark.canonicalize as C
+
+    tiers = []
+    real = C._driver_union_find
+    monkeypatch.setattr(
+        C, "_driver_union_find",
+        lambda *a: tiers.append("driver") or real(*a),
+    )
+    base = CASES["two_cliques_merged"]
+    t = len(base)
+    for edges, tier in (
+        (base + [("a1", "a2"), ("z", "z")], ["driver"]),
+        (base + [("c1", "c2")], []),
+    ):
+        tiers.clear()
+        df = spark.createDataFrame(edges, "a string, b string")
+        got = {
+            r["node_id"]: r["canonical_id"]
+            for r in connected_components(df, "a", "b", driver_threshold=t).collect()
+        }
+        assert tiers == tier
+        assert got == _uf_components(edges)

@@ -150,7 +150,7 @@ class TestDistributedExtraction:
     def test_content_sha256_invariant(self, spark, smoke_repos):
         """Every output triple's content_sha256 equals sha256(content)
         of its source row (per-row invariant, BASELINE.json input_hint)."""
-        triples = extract_triples(smoke_repos, salt=False)
+        triples = extract_triples(smoke_repos)
         src = smoke_repos.select(
             "repo", "path", F.sha2("content", 256).alias("src_sha")
         )

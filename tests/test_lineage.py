@@ -1,7 +1,8 @@
 """StageTracker boundary contract: every boundary reads back through its
 marker's schema without a Spark job, markers of another engine version
-never resume, input identity covers in-memory corpora, and a failed
-marker publish re-runs exactly the failed stage."""
+never resume, input identity covers in-memory corpora and filtered or
+rewritten files, and a failed marker publish re-runs exactly the failed
+stage."""
 
 from __future__ import annotations
 
@@ -120,6 +121,83 @@ def test_run_pipeline_keys_in_memory_input_by_content(spark, smoke_repos, tmp_pa
     want = {tuple(r) for r in second.select("repo", "path").collect()}
     got = {tuple(r) for r in out["triples_raw"].select("repo", "path").distinct().collect()}
     assert got == want
+
+
+def _files(df):
+    return {tuple(r) for r in df.select("repo", "path").distinct().collect()}
+
+
+def _slice(smoke_repos, i):
+    return smoke_repos.where(F.abs(F.xxhash64("repo", "path")) % 20 == i)
+
+
+def test_run_pipeline_keys_filtered_file_input_by_plan(spark, smoke_repos, tmp_path):
+    """A filter over the same input files is another input: after a run
+    over the filtered frame, a run over the unfiltered one in the same
+    work dir extracts every file."""
+    path = str(tmp_path / "corpus")
+    _slice(smoke_repos, 0).write.parquet(path)
+    full = spark.read.parquet(path)
+    work = str(tmp_path / "wd")
+    run_pipeline(spark, full.where(F.length("path") % 2 == 0), work)
+    out = run_pipeline(spark, full, work)
+    assert _files(out["triples_raw"]) == _files(full)
+
+
+def test_run_pipeline_keys_rewritten_input_file_by_status(spark, smoke_repos, tmp_path):
+    """An input file rewritten in place (same path, other rows) is another
+    input: the second run extracts the new rows, not the old boundary."""
+    import shutil
+
+    path = tmp_path / "corpus"
+    path.mkdir()
+    target = path / "part-0.parquet"
+    for i in (0, 1):
+        staged = str(tmp_path / f"staged{i}")
+        _slice(smoke_repos, i).coalesce(1).write.parquet(staged)
+        (part,) = [f for f in os.listdir(staged) if f.endswith(".parquet")]
+        shutil.copyfile(os.path.join(staged, part), target)
+        os.utime(target, (1_000_000_000 + i, 1_000_000_000 + i))
+        repos = spark.read.parquet(str(path))
+        out = run_pipeline(spark, repos, str(tmp_path / "wd"))
+    assert _files(out["triples_raw"]) == _files(_slice(smoke_repos, 1))
+
+
+def test_input_signature_is_stable_across_processes(spark, smoke_corpus_path):
+    """CLI resume keys a file-backed input by one read of it: the same
+    read in two fresh Python processes (fresh JVMs) and in this session
+    gives one signature."""
+    import subprocess
+    import sys
+
+    from datacapsule_spark.lineage import input_signature
+
+    code = (
+        "import json, sys\n"
+        "from datacapsule_spark.session import get_spark\n"
+        "from datacapsule_spark.lineage import input_signature\n"
+        "s = get_spark('sig', master='local[1]', shuffle_partitions=1)\n"
+        "df = s.read.parquet(sys.argv[1]).where(\"lang = 'python'\")\n"
+        "print('SIG', json.dumps(input_signature(df), sort_keys=True))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", code, smoke_corpus_path],
+            cwd=root, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
+        )
+        for _ in range(2)
+    ]
+    sigs = []
+    for p in procs:
+        out, _ = p.communicate(timeout=300)
+        assert p.returncode == 0
+        sigs += [json.loads(l[4:]) for l in out.splitlines() if l.startswith("SIG ")]
+    here = input_signature(
+        spark.read.parquet(smoke_corpus_path).where("lang = 'python'")
+    )
+    assert sigs == [here, here]
+    assert "plan_md5" in here
 
 
 @pytest.fixture(scope="module")

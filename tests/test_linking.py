@@ -5,7 +5,6 @@ all-pairs Jaccard, plus the full pipeline's fuzzy tier."""
 from __future__ import annotations
 
 import itertools
-import math
 import re
 
 import pytest
@@ -29,7 +28,7 @@ def test_lsh_alias_pairs_finds_near_names(spark):
     )
     pairs = {
         (r["a"], r["b"]): r["score"]
-        for r in fuzzy_alias_pairs(names, min_rescore=0.5).collect()
+        for r in fuzzy_alias_pairs(names).collect()
     }
     flat = set()
     for a, b in pairs:
@@ -41,11 +40,10 @@ def test_lsh_alias_pairs_finds_near_names(spark):
     assert all(0 < s <= 1 for s in pairs.values())
 
 
-def _oracle_scores(raw, score_fn):
-    """Brute-force all pairs a < b with gram Jaccard >= FUZZY_JACCARD,
-    scored by score_fn (jaccard, or idf-weighted binary-gram cosine with
-    idf from the same dictionary)."""
-    from datacapsule_spark.linking import FUZZY_JACCARD
+def _oracle_scores(raw):
+    """Brute-force all pairs a < b with gram Jaccard >= LINK_JACCARD,
+    scored by that Jaccard."""
+    from datacapsule_spark.linking import LINK_JACCARD
 
     def norm(s):
         return re.sub(r"[^a-z0-9]", "", s.lower())
@@ -56,58 +54,13 @@ def _oracle_scores(raw, score_fn):
         for n in set(raw)
         if len(norm(n)) >= 3
     }
-    df = {}
-    for gs in dic.values():
-        for g in gs:
-            df[g] = df.get(g, 0) + 1
-    idf = {g: math.log((len(dic) + 1) / (d + 1)) + 1 for g, d in df.items()}
-
-    def cos(ga, gb):
-        dot = sum(idf[g] ** 2 for g in ga & gb)
-        na = math.sqrt(sum(idf[g] ** 2 for g in ga))
-        nb = math.sqrt(sum(idf[g] ** 2 for g in gb))
-        return dot / (na * nb)
-
     out = {}
     for a, b in itertools.combinations(sorted(dic), 2):
         ga, gb = dic[a], dic[b]
         jac = len(ga & gb) / len(ga | gb)
-        if jac >= FUZZY_JACCARD:
-            out[(a, b)] = jac if score_fn == "jaccard" else cos(ga, gb)
+        if jac >= LINK_JACCARD - 1e-9:
+            out[(a, b)] = jac
     return out
-
-
-def test_lsh_tfidf_cosine_rescore(spark):
-    """score_fn='tfidf_cosine' (exact candidate join + TF-IDF cosine
-    scoring): scores match a from-scratch Python computation of
-    idf-weighted binary-gram cosine over the same dictionary, and the
-    typo pair still links."""
-    from datacapsule_spark.linking import fuzzy_alias_pairs
-
-    raw = [
-        "sym:HttpClientFactory",
-        "sym:http_client_factory",
-        "sym:HttpClientFactry",
-        "sym:StreamBufferWriter",
-        "sym:CompletelyDifferent",
-    ]
-    names = spark.createDataFrame([(n,) for n in raw], "name string")
-    got = {
-        (r["a"], r["b"]): r["score"]
-        for r in fuzzy_alias_pairs(
-            names, min_rescore=0.3, score_fn="tfidf_cosine"
-        ).collect()
-    }
-    typo = ("sym:HttpClientFactory", "sym:HttpClientFactry")
-    assert typo in got
-    want = _oracle_scores(raw, "tfidf_cosine")
-    for pair, score in got.items():
-        assert score == pytest.approx(want[pair], abs=1e-9), pair
-    # idf weighting: the shared-rare-grams typo pair outranks any
-    # pair that would share only common affixes
-    assert got[typo] > 0.5
-    with pytest.raises(ValueError):
-        fuzzy_alias_pairs(names, score_fn="dice")
 
 
 @st.composite
@@ -132,27 +85,26 @@ def _name_sets(draw):
     return out
 
 
-@pytest.mark.parametrize("score_fn", ["jaccard", "tfidf_cosine"])
+@pytest.mark.parametrize("threshold", [0.5, 0.6, 0.7, 0.9])
 @settings(max_examples=15, deadline=None)
-@given(raw=_name_sets(), min_rescore=st.sampled_from([0.0, 0.7]))
-def test_fuzzy_alias_pairs_equal_brute_force(spark, score_fn, raw, min_rescore):
+@given(raw=_name_sets())
+def test_fuzzy_alias_pairs_equal_brute_force(spark, threshold, raw):
     """The prefix-filtered join emits exactly the brute-force pairs with
-    Jaccard >= FUZZY_JACCARD that pass the min_rescore cut, with the
-    same scores."""
-    from datacapsule_spark.linking import fuzzy_alias_pairs
+    Jaccard >= LINK_JACCARD, with the same scores, at any threshold:
+    prefix length, length filter and verification all follow it."""
+    from datacapsule_spark import linking
 
     names = spark.createDataFrame([(n,) for n in raw], "name string")
-    got = {
-        (r["a"], r["b"]): r["score"]
-        for r in fuzzy_alias_pairs(
-            names, min_rescore=min_rescore, score_fn=score_fn
-        ).collect()
-    }
-    want = _oracle_scores(raw, score_fn)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(linking, "LINK_JACCARD", threshold)
+        got = {
+            (r["a"], r["b"]): r["score"]
+            for r in linking.fuzzy_alias_pairs(names).collect()
+        }
+        want = _oracle_scores(raw)
     # a score within float noise of the cut may land on either side
-    sure = {p for p, v in want.items() if v >= min_rescore + 1e-9}
-    maybe = {p for p, v in want.items() if v >= min_rescore - 1e-9}
-    assert sure <= set(got) <= maybe
+    sure = {p for p, v in want.items() if v >= threshold + 1e-9}
+    assert sure <= set(got) <= set(want)
     for pair, score in got.items():
         assert score == pytest.approx(want[pair], abs=1e-9), pair
 
