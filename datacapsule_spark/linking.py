@@ -1,17 +1,17 @@
-"""Distributed entity linking: exact name-gram similarity join.
+"""Entity linking: exact name-gram similarity join, in two tiers.
 
 Upgrades the reference's exact-string node identity (NetworkX add_node
 on the same surface string, tools/entity_extraction.py:93-133 — J5 in
 SURVEY.md) to real alias resolution: symbol names that differ only by
 case convention (HttpClient / http_client) or small edits are linked.
 
-Two-tier design, both fully distributed and both exact:
+Two kinds of link, both exact:
 
-1. **Normalization tier** (cheap): `norm = lower + strip non-alnum`.
-   Names sharing a normal form are aliases by construction. This is a
-   groupBy, no pairwise work — it alone resolves the planted
-   CamelCase/snake_case variants.
-2. **Fuzzy tier** (near-miss aliases): a prefix-filtered self-join over
+1. **Normal form** (cheap): `norm = lower + strip non-alnum`.
+   Names sharing a normal form are aliases by construction: each
+   group is a star to its min name, no pairwise work. This alone
+   resolves the planted CamelCase/snake_case variants.
+2. **Fuzzy** (near-miss aliases): a prefix-filtered self-join over
    the character-3-gram sets of the normalized names (the filter-and-
    verify join of *Distributed Similarity Joins over Top-K Rankings*,
    EDBT 2020). Exactly the pairs with gram-set Jaccard ≥ LINK_JACCARD
@@ -19,19 +19,37 @@ Two-tier design, both fully distributed and both exact:
    Only pairs sharing a prefix gram are ever formed, so cost is
    ~O(candidates), never O(n²).
 
-At 10^12-file scale the distinct-symbol dictionary is << corpus size
-(vocabulary saturates), so the join runs on the deduped name table,
-not the corpus.
+Both run over the deduped name dictionary, not the corpus (at 10^12-
+file scale the distinct-symbol vocabulary is << corpus size). One
+capped collect of that dictionary (`canonicalize.collect_capped`, the
+gate CC and the serving index use) picks the tier: up to
+LINK_DRIVER_NAMES names, both joins run in plain Python on the driver
+(`_driver_alias_pairs`); above it, as Spark jobs. The tiers are
+equivalence-tested against one brute-force oracle (tests/test_linking.py).
 """
 
 from __future__ import annotations
 
+import math
+from collections import Counter, defaultdict
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# The one threshold of the fuzzy tier: two names link iff their 3-gram
+from .canonicalize import collect_capped
+
+# The one threshold of the fuzzy join: two names link iff their 3-gram
 # sets have Jaccard >= LINK_JACCARD.
 LINK_JACCARD = 0.7
+
+# Largest name dictionary linked on the driver: the largest size measured
+# (bench/link_tiers.py, fresh JVMs, 4 cores, names from 24 common words)
+# where the driver tier is not slower — 41 s against 718 s for the Spark
+# tier at 20k names; see bench/BASELINE.md "Linking tiers".
+LINK_DRIVER_NAMES = 20_000
+
+_PAIRS = pa.struct([("a", pa.string()), ("b", pa.string()), ("score", pa.float64())])
 
 
 def normalize_name(col):
@@ -121,14 +139,94 @@ def fuzzy_alias_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
     )
 
 
-def alias_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
-    """Union of the exact-normal-form tier and the fuzzy tier.
-    The deduped name dictionary is materialized ONCE here — `names` is
-    typically a lazy view over a corpus-sized boundary, and each tier
-    would otherwise re-run that scan + distinct."""
-    n = names.select(F.col(name_col).alias("name")).distinct().localCheckpoint(eager=True)
+def alias_pairs(
+    names: DataFrame, name_col: str = "name", driver_threshold: int = LINK_DRIVER_NAMES
+) -> DataFrame:
+    """Normal-form stars ∪ fuzzy pairs over the distinct names:
+    alias_pairs(a, b, score), each pair once (a < b).
+
+    The distinct dictionary (name, norm) is built once, with `norm`
+    computed in the JVM by normalize_name (Python's str.lower is not
+    Spark's lower, whose non-ASCII path follows the JVM default locale).
+    One capped collect of it picks the tier:
+
+    - at most driver_threshold distinct names: both joins run in plain
+      Python on the collected rows (`_driver_alias_pairs`); the whole
+      stage is that collect plus the write of the result.
+    - more (or driver_threshold=0): exact_norm_alias_pairs ∪
+      fuzzy_alias_pairs as Spark jobs. The gate has then pulled
+      driver_threshold + 1 names to the driver and dropped them (the
+      collect_capped cost; negligible at <= 20k strings).
+
+    The dictionary sits behind a lazy localCheckpoint: the capped collect
+    fills it, so the Spark tier reads it and never re-scans `names`
+    (typically a lazy view over a corpus-sized boundary)."""
+    dictionary = (
+        names.select(F.col(name_col).alias("name"))
+        .distinct()
+        .withColumn("norm", normalize_name(F.col("name")))
+        .localCheckpoint(eager=False)
+    )
+    rows = collect_capped(dictionary, driver_threshold)
+    if rows is not None:
+        # via Arrow: a LocalRelation, so reading the pairs back launches
+        # no job
+        table = pa.Table.from_struct_array(pa.array(_driver_alias_pairs(rows), _PAIRS))
+        return names.sparkSession.createDataFrame(table)
     return (
-        exact_norm_alias_pairs(n)
-        .unionByName(fuzzy_alias_pairs(n))
+        exact_norm_alias_pairs(dictionary)
+        .unionByName(fuzzy_alias_pairs(dictionary))
         .dropDuplicates(["a", "b"])
     )
+
+
+def _driver_alias_pairs(rows) -> list[tuple[str, str, float]]:
+    """The Spark tier's output, computed in Python over collected
+    (name, norm) rows, sorted by (a, b).
+
+    Normal form: every member of a norm group pairs with the group's min
+    name, score 1.0. Fuzzy: the same rarest-first prefix filter (gram
+    frequency over the dictionary, ties by gram), length filter and
+    exact Jaccard check as fuzzy_alias_pairs, with the same 1e-9 slack.
+    Names are probed in ascending gram-count order against an index of
+    the prefixes seen so far (AllPairs), so each candidate pair is formed
+    once and the length filter reduces to |B| >= t·|A| for the smaller B.
+    String order is the same on both sides (Python code points ≡ Spark
+    UTF8_BINARY), and norm is ASCII, so its grams and their order are too.
+    """
+    t = LINK_JACCARD - 1e-9
+    pairs: dict[tuple[str, str], float] = {}
+
+    groups = defaultdict(list)
+    for r in rows:
+        if r["norm"]:
+            groups[r["norm"]].append(r["name"])
+    for members in groups.values():
+        a = min(members)
+        pairs.update(((a, b), 1.0) for b in members if b != a)
+
+    grams = {
+        r["name"]: {r["norm"][i : i + 3] for i in range(len(r["norm"]) - 2)}
+        for r in rows
+        if r["norm"] and len(r["norm"]) >= 3
+    }
+    freq = Counter(g for gs in grams.values() for g in gs)
+    index = defaultdict(list)  # prefix gram → names with it, by size
+    short = Counter()  # index[g][:short[g]] is below every later length cut
+    for x in sorted(grams, key=lambda x: len(grams[x])):
+        gx = grams[x]
+        nx = len(gx)
+        cands = set()
+        for g in sorted(gx, key=lambda g: (freq[g], g))[: nx - math.ceil(nx * t) + 1]:
+            ys, i = index[g], short[g]
+            while i < len(ys) and len(grams[ys[i]]) < nx * t:
+                i += 1
+            short[g] = i
+            cands.update(ys[i:])
+            ys.append(x)
+        for y in cands:
+            inter = len(gx & grams[y])
+            score = inter / (nx + len(grams[y]) - inter)
+            if score >= LINK_JACCARD:
+                pairs[min(x, y), max(x, y)] = score
+    return sorted((a, b, s) for (a, b), s in pairs.items())

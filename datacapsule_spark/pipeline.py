@@ -165,8 +165,7 @@ def _downstream(
             & (F.col("obj_type") == "symbol")
         )
         .select(F.col("obj").alias("name"))
-        .distinct()
-    )
+    )  # alias_pairs dedups its input once
     pairs = tracker.materialize(
         "20_link", lambda: alias_pairs(sym_names), params=down
     )

@@ -1,11 +1,11 @@
-"""Entity-linking tiers: exact normal form and the prefix-filtered
-fuzzy similarity join (SURVEY J5), checked against brute-force
-all-pairs Jaccard, plus the full pipeline's fuzzy tier."""
+"""Entity linking (SURVEY J5): the normal-form and prefix-filtered fuzzy
+joins on both tiers (plain Python on the driver, Spark jobs above the
+limit), checked against brute-force all-pairs Jaccard; the tier gate;
+and the full pipeline's fuzzy links."""
 
 from __future__ import annotations
 
 import itertools
-import re
 
 import pytest
 from hypothesis import given, settings
@@ -40,19 +40,29 @@ def test_lsh_alias_pairs_finds_near_names(spark):
     assert all(0 < s <= 1 for s in pairs.values())
 
 
-def _oracle_scores(raw):
+def _jvm_norms(spark, raw):
+    """name → its normal form as the JVM computes it (normalize_name):
+    Spark's lower follows the JVM default locale off the ASCII path, so
+    Python's str.lower is not the definition."""
+    from datacapsule_spark.linking import normalize_name
+
+    df = spark.createDataFrame([(n,) for n in set(raw)], "name string")
+    return {
+        r["name"]: r["norm"]
+        for r in df.select("name", normalize_name(F.col("name")).alias("norm")).collect()
+    }
+
+
+def _oracle_scores(raw, norms):
     """Brute-force all pairs a < b with gram Jaccard >= LINK_JACCARD,
     scored by that Jaccard."""
     from datacapsule_spark.linking import LINK_JACCARD
 
-    def norm(s):
-        return re.sub(r"[^a-z0-9]", "", s.lower())
-
     # name → char-3-grams of its normal form (>= 3 normal chars only)
     dic = {
-        n: {norm(n)[i : i + 3] for i in range(len(norm(n)) - 2)}
+        n: {norms[n][i : i + 3] for i in range(len(norms[n]) - 2)}
         for n in set(raw)
-        if len(norm(n)) >= 3
+        if len(norms[n]) >= 3
     }
     out = {}
     for a, b in itertools.combinations(sorted(dic), 2):
@@ -63,17 +73,52 @@ def _oracle_scores(raw):
     return out
 
 
+def _oracle_alias_pairs(raw, norms):
+    """alias_pairs by brute force: every name of a non-empty normal form
+    paired with its group's min name (score 1.0), plus the fuzzy pairs."""
+    groups = {}
+    for n in set(raw):
+        if norms[n]:
+            groups.setdefault(norms[n], []).append(n)
+    out = _oracle_scores(raw, norms)
+    for members in groups.values():
+        out.update({(min(members), b): 1.0 for b in members if b != min(members)})
+    return out
+
+
+def _assert_oracle(got, want, threshold):
+    # a score within float noise of the cut may land on either side
+    sure = {p for p, v in want.items() if v >= threshold + 1e-9}
+    assert sure <= set(got) <= set(want)
+    for pair, score in got.items():
+        assert score == pytest.approx(want[pair], abs=1e-9), pair
+
+
+def _pairs(df):
+    rows = df.collect()
+    assert len(rows) == len({(r["a"], r["b"]) for r in rows})  # each pair once
+    assert all(r["a"] < r["b"] for r in rows)
+    return {(r["a"], r["b"]): r["score"] for r in rows}
+
+
+# letters whose lowercase is ASCII (Kelvin sign, dotted capital I) or not
+# (capital sharp s, é), and fullwidth letters
+_NON_ASCII = "\u212a\u0130\u1e9e\u00e9\uff21\uff42"
+
+
 @st.composite
 def _name_sets(draw):
     """Random name dictionaries over a small alphabet (so grams collide),
     with duplicates, case/separator variants that share a normal form,
-    one-character edits, and names whose normal form is < 3 chars."""
+    one-character edits, non-ASCII letters, and names whose normal form
+    is < 3 chars."""
+    letters = st.sampled_from("abcd" * 3 + "i" + _NON_ASCII)  # mostly abcd
     out = []
-    for base in draw(st.lists(st.text("abcd", max_size=10), min_size=1, max_size=14)):
+    for base in draw(st.lists(st.text(letters, max_size=10), min_size=1, max_size=14)):
         out.append(base)
         for kind in draw(st.lists(st.sampled_from("dusrix"), max_size=3)):
             i = draw(st.integers(0, len(base)))
-            c = draw(st.sampled_from("abcd"))
+            c = draw(letters)
             out.append({
                 "d": base,
                 "u": base.upper(),
@@ -101,12 +146,99 @@ def test_fuzzy_alias_pairs_equal_brute_force(spark, threshold, raw):
             (r["a"], r["b"]): r["score"]
             for r in linking.fuzzy_alias_pairs(names).collect()
         }
-        want = _oracle_scores(raw)
-    # a score within float noise of the cut may land on either side
-    sure = {p for p, v in want.items() if v >= threshold + 1e-9}
-    assert sure <= set(got) <= set(want)
-    for pair, score in got.items():
-        assert score == pytest.approx(want[pair], abs=1e-9), pair
+        want = _oracle_scores(raw, _jvm_norms(spark, raw))
+    _assert_oracle(got, want, threshold)
+
+
+@pytest.mark.parametrize("threshold", [0.5, 0.6, 0.7, 0.9])
+@settings(max_examples=15, deadline=None)
+@given(raw=_name_sets())
+def test_alias_pairs_tiers_equal_brute_force(spark, threshold, raw):
+    """Both tiers of alias_pairs, the Spark joins (driver_threshold=0)
+    and the driver's plain-Python joins (the default), equal the
+    brute-force normal-form stars ∪ fuzzy pairs, and each other exactly,
+    schema included."""
+    from datacapsule_spark import linking
+
+    names = spark.createDataFrame([(n,) for n in raw], "name string")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(linking, "LINK_JACCARD", threshold)
+        want = _oracle_alias_pairs(raw, _jvm_norms(spark, raw))
+        spark_tier = linking.alias_pairs(names, driver_threshold=0)
+        driver_tier = linking.alias_pairs(names)
+        got = _pairs(spark_tier)
+        assert _pairs(driver_tier) == got
+    assert driver_tier.schema == spark_tier.schema
+    _assert_oracle(got, want, threshold)
+
+
+_GATE_NAMES = [
+    "HttpClient", "http_client", "HttpClientX", "HTTP-CLIENT",
+    "StreamBufferWriter", "StreamBufferWritter", "ab", "AB", "x",
+]
+
+
+def test_link_driver_tier_launches_at_most_two_jobs(spark):
+    """Below the limit, linking is one capped collect of the name
+    dictionary (its shuffle plus its result stage); the pairs come back
+    as a local relation, so reading them launches no further job."""
+    from datacapsule_spark.linking import alias_pairs
+
+    names = spark.createDataFrame([(n,) for n in _GATE_NAMES], "name string")
+    sc = spark.sparkContext
+    sc.setJobGroup("link-driver-tier", "link job guard")
+    try:
+        got = _pairs(alias_pairs(names))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("link-driver-tier")) <= 2
+    assert got == _oracle_alias_pairs(_GATE_NAMES, _jvm_norms(spark, _GATE_NAMES))
+
+
+def test_link_tier_limit_counts_distinct_names(spark, monkeypatch):
+    """The limit is inclusive and counts distinct names: exactly t names
+    (plus a duplicate) take the driver tier, t + 1 the Spark tier, and
+    both equal the oracle."""
+    from datacapsule_spark import linking
+
+    tiers = []
+    real = linking._driver_alias_pairs
+    monkeypatch.setattr(
+        linking, "_driver_alias_pairs", lambda rows: tiers.append("driver") or real(rows)
+    )
+    t = len(_GATE_NAMES)
+    for raw, tier in (
+        (_GATE_NAMES + ["HttpClient"], ["driver"]),
+        (_GATE_NAMES + ["StreamBuferWriter"], []),
+    ):
+        tiers.clear()
+        names = spark.createDataFrame([(n,) for n in raw], "name string")
+        got = _pairs(linking.alias_pairs(names, driver_threshold=t))
+        assert tiers == tier
+        assert got == pytest.approx(_oracle_alias_pairs(raw, _jvm_norms(spark, raw)))
+
+
+def test_link_tiers_take_the_norm_from_the_jvm(spark):
+    """Under a Turkish JVM default locale Spark lowercases 'I' in a
+    non-ASCII string to dotless 'ı', which the normal form drops, where
+    Python's str.lower gives 'i'. Both tiers follow the JVM: ÉFILE
+    links to fle (norm fle), not to file."""
+    from datacapsule_spark.linking import alias_pairs
+
+    Locale = spark.sparkContext._jvm.java.util.Locale
+    default = Locale.getDefault()
+    raw = ["\u00c9FILE", "fle", "file", "DATAFILE", "datafle"]
+    names = spark.createDataFrame([(n,) for n in raw], "name string")
+    Locale.setDefault(Locale.forLanguageTag("tr"))
+    try:
+        norms = _jvm_norms(spark, raw)
+        tiers = [_pairs(alias_pairs(names, driver_threshold=t)) for t in (0, len(raw))]
+    finally:
+        Locale.setDefault(default)
+    assert norms["\u00c9FILE"] == "fle"
+    want = _oracle_alias_pairs(raw, norms)
+    assert ("fle", "\u00c9FILE") in want
+    assert tiers == [want, want]
 
 
 def test_pipeline_with_lsh_merges_typos(spark, tmp_path):

@@ -228,6 +228,51 @@ def test_split_stream_canon_equals_full_dedup(spark, smoke_repos):
     assert len(split) == len({(s, p, o) for s, p, o, *_ in split})
 
 
+def test_link_tiers_give_identical_boundaries(spark, tmp_path, monkeypatch):
+    """A build that links on the driver and one forced onto the Spark
+    tier (driver_threshold=0) write identical 20_link, 30_canonicalize
+    and 40_canon_edges rows under identical marker schemas."""
+    import functools
+    import json
+
+    import datacapsule_spark.linking as L
+    import datacapsule_spark.pipeline as P
+    from datacapsule_spark.corpus import generate_row, symbol_vocab
+
+    vocab = symbol_vocab()
+    rows = [generate_row(i, vocab) for i in range(40)]
+    # a near-miss alias the normal form cannot link (fuzzy pair)
+    typo = vocab[0][:-1] + vocab[0][-1] * 2
+    content = f"# year: 2001\ndef {vocab[0]}(x):\n    return x\ny = {typo}(1)\n" + "\n" * 18
+    rows.append(("o/r", "typo.py", "c" * 40, "python", content))
+    repos = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    tiers = []
+    real = L._driver_alias_pairs
+    monkeypatch.setattr(
+        L, "_driver_alias_pairs", lambda r: tiers.append("driver") or real(r)
+    )
+    out = {}
+    for tier, link in (("driver", L.alias_pairs),
+                       ("spark", functools.partial(L.alias_pairs, driver_threshold=0))):
+        monkeypatch.setattr(P, "alias_pairs", link)
+        work = tmp_path / tier
+        run_pipeline(spark, repos, str(work))
+        out[tier] = {
+            stage: (
+                sorted(map(tuple, StageTracker(spark, str(work)).load(stage).collect())),
+                json.loads((work / f"stage_{stage}" / "_STAGE_DONE").read_text())["schema"],
+            )
+            for stage in ("20_link", "30_canonicalize", "40_canon_edges")
+        }
+    assert tiers == ["driver"]
+    assert out["driver"] == out["spark"]
+    link_rows = out["driver"]["20_link"][0]
+    assert any(s == 1.0 for *_, s in link_rows)  # normal-form pairs
+    assert any(s < 1.0 for *_, s in link_rows)  # fuzzy pairs
+
+
 def test_iceberg_branch_is_code_not_prose(spark, tmp_path):
     """The iceberg=True paths exist as executable branches: with no
     catalog on the session (this sandbox) they must fail fast with
