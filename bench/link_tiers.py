@@ -6,12 +6,15 @@ subprocess), on an adversarial vocabulary: every name joins 2-4 of 24
 common identifier words in a random case style, so normal forms collide
 and gram prefix lists are long, the driver tier's worst case. A sample
 writes the names to parquet, warms the session with one scan, then times
-`alias_pairs(names, driver_threshold=...)` written to parquet, as the
-`20_link` stage does. Samples alternate tiers; both tiers' outputs must
-be equal (row count and md5 of the sorted rows), or the run fails.
+`alias_pairs(names)` written to parquet, as the `20_link` stage does,
+with `LINK_DRIVER_NAMES` set to the size (driver tier) or 0 (Spark
+tier), and records the driver process's peak RSS. Samples alternate
+tiers; both tiers' outputs must be equal (row count and md5 of the
+sorted rows), or the run fails. A sample that runs past --timeout is
+stopped (its whole process group) and reported as "> timeout".
 
     python bench/link_tiers.py                          # 2k 5k 10k 20k, 2 repeats
-    python bench/link_tiers.py --sizes 2000 --repeats 1
+    python bench/link_tiers.py --sizes 40000 80000 --repeats 1 --timeout 1000
     python bench/link_tiers.py --sample 5000 driver     # one sample (JSON line)
 
 Prints one JSON line per sample and a markdown table at the end.
@@ -25,6 +28,9 @@ import hashlib
 import json
 import os
 import random
+import resource
+import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -60,7 +66,7 @@ def vocabulary(n: int, seed: int = 7) -> list[str]:
 
 
 def sample(n: int, tier: str) -> dict:
-    from datacapsule_spark.linking import alias_pairs
+    from datacapsule_spark import linking
     from datacapsule_spark.session import get_spark
 
     import pyarrow as pa
@@ -75,18 +81,44 @@ def sample(n: int, tier: str) -> dict:
         names.count()  # session warm-up, not timed
         t0 = time.perf_counter()
         out = os.path.join(tmp, "link")
-        alias_pairs(names, driver_threshold=n if tier == "driver" else 0).write.parquet(out)
+        linking.LINK_DRIVER_NAMES = n if tier == "driver" else 0
+        linking.alias_pairs(names).write.parquet(out)
         wall = time.perf_counter() - t0
         rows = sorted(tuple(r) for r in spark.read.parquet(out).collect())
     spark.stop()
     md5 = hashlib.md5(repr(rows).encode()).hexdigest()
-    return {"names": n, "tier": tier, "wall_s": round(wall, 3), "pairs": len(rows), "md5": md5}
+    rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+    return {"names": n, "tier": tier, "wall_s": round(wall, 3), "pairs": len(rows),
+            "md5": md5, "driver_rss_mb": round(rss_mb)}
+
+
+def run_sample(n: int, tier: str, timeout: float | None) -> dict:
+    """One sample in a fresh process; on timeout its process group (the
+    JVM included) is killed and its temp files removed."""
+    tmp = tempfile.mkdtemp(prefix="link_tiers_")
+    proc = subprocess.Popen(
+        [sys.executable, __file__, "--sample", str(n), tier],
+        stdout=subprocess.PIPE, text=True, start_new_session=True,
+        env={**os.environ, "TMPDIR": tmp, "SPARK_LOCAL_DIRS": tmp},
+    )
+    try:
+        out, _ = proc.communicate(timeout=timeout)
+    except subprocess.TimeoutExpired:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.communicate()
+        return {"names": n, "tier": tier, "wall_s": None, "timeout_s": timeout}
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    if proc.returncode:
+        sys.exit(f"sample {n} {tier} failed (exit {proc.returncode})")
+    return json.loads(out.strip().splitlines()[-1])
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sizes", type=int, nargs="+", default=[2000, 5000, 10000, 20000])
     ap.add_argument("--repeats", type=int, default=2)
+    ap.add_argument("--timeout", type=float, help="seconds per sample")
     ap.add_argument("--sample", nargs=2, metavar=("NAMES", "TIER"))
     args = ap.parse_args()
     if args.sample:
@@ -98,22 +130,24 @@ def main() -> None:
         for rep in range(args.repeats):
             tiers = ("driver", "spark") if rep % 2 == 0 else ("spark", "driver")
             for tier in tiers:
-                proc = subprocess.run(
-                    [sys.executable, __file__, "--sample", str(n), tier],
-                    capture_output=True, text=True, check=True,
-                )
-                r = json.loads(proc.stdout.strip().splitlines()[-1])
+                r = run_sample(n, tier, args.timeout)
                 print(json.dumps(r), flush=True)
                 results.setdefault((n, tier), []).append(r)
-        fingerprints = {(r["pairs"], r["md5"]) for t in ("driver", "spark") for r in results[(n, t)]}
-        if len(fingerprints) != 1:
-            sys.exit(f"tiers disagree at {n} names: {fingerprints}")
+        done = [r for t in ("driver", "spark") for r in results[(n, t)] if r["wall_s"] is not None]
+        if len({(r["pairs"], r["md5"]) for r in done}) > 1:
+            sys.exit(f"tiers disagree at {n} names: {done}")
 
-    print("\n| names | pairs | driver tier (s) | Spark tier (s) |")
-    print("|---|---|---|---|")
+    def cell(rs: list[dict]) -> str:
+        done = [r["wall_s"] for r in rs if r["wall_s"] is not None]
+        return f"{statistics.median(done):.2f}" if done else f"> {rs[0]['timeout_s']:.0f}"
+
+    print("\n| names | pairs | driver tier (s) | Spark tier (s) | driver peak RSS (MB) |")
+    print("|---|---|---|---|---|")
     for n in args.sizes:
-        med = {t: statistics.median(r["wall_s"] for r in results[(n, t)]) for t in ("driver", "spark")}
-        print(f"| {n} | {results[(n, 'driver')][0]['pairs']} | {med['driver']:.2f} | {med['spark']:.2f} |")
+        done = [r for t in ("driver", "spark") for r in results[(n, t)] if r["wall_s"] is not None]
+        pairs = done[0]["pairs"] if done else "?"
+        rss = max((r["driver_rss_mb"] for r in done if r["tier"] == "driver"), default="?")
+        print(f"| {n} | {pairs} | {cell(results[(n, 'driver')])} | {cell(results[(n, 'spark')])} | {rss} |")
 
 
 if __name__ == "__main__":

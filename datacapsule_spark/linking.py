@@ -43,11 +43,14 @@ from .canonicalize import collect_capped
 # sets have Jaccard >= LINK_JACCARD.
 LINK_JACCARD = 0.7
 
-# Largest name dictionary linked on the driver: the largest size measured
-# (bench/link_tiers.py, fresh JVMs, 4 cores, names from 24 common words)
-# where the driver tier is not slower — 41 s against 718 s for the Spark
-# tier at 20k names; see bench/BASELINE.md "Linking tiers".
-LINK_DRIVER_NAMES = 20_000
+# Largest name dictionary linked on the driver. bench/link_tiers.py
+# (fresh JVMs, 4 cores, names from 24 common words) found no crossover:
+# the driver tier was faster at every size from 2k to 80k names (893 s
+# against > 1000 s for the Spark tier at 80k, at 546 MB peak driver
+# RSS), so this is the largest size measured. Above it the Spark tier
+# runs: the only path for a dictionary that does not fit in driver
+# memory. See bench/BASELINE.md "Linking tiers".
+LINK_DRIVER_NAMES = 80_000
 
 _PAIRS = pa.struct([("a", pa.string()), ("b", pa.string()), ("score", pa.float64())])
 
@@ -139,9 +142,7 @@ def fuzzy_alias_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
     )
 
 
-def alias_pairs(
-    names: DataFrame, name_col: str = "name", driver_threshold: int = LINK_DRIVER_NAMES
-) -> DataFrame:
+def alias_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
     """Normal-form stars ∪ fuzzy pairs over the distinct names:
     alias_pairs(a, b, score), each pair once (a < b).
 
@@ -150,13 +151,14 @@ def alias_pairs(
     Spark's lower, whose non-ASCII path follows the JVM default locale).
     One capped collect of it picks the tier:
 
-    - at most driver_threshold distinct names: both joins run in plain
-      Python on the collected rows (`_driver_alias_pairs`); the whole
-      stage is that collect plus the write of the result.
-    - more (or driver_threshold=0): exact_norm_alias_pairs ∪
+    - at most LINK_DRIVER_NAMES distinct names (read at call time):
+      both joins run in plain Python on the collected rows
+      (`_driver_alias_pairs`); the whole stage is that collect plus the
+      write of the result.
+    - more (or LINK_DRIVER_NAMES = 0): exact_norm_alias_pairs ∪
       fuzzy_alias_pairs as Spark jobs. The gate has then pulled
-      driver_threshold + 1 names to the driver and dropped them (the
-      collect_capped cost; negligible at <= 20k strings).
+      LINK_DRIVER_NAMES + 1 names to the driver and dropped them (the
+      collect_capped cost; small beside the Spark joins at that size).
 
     The dictionary sits behind a lazy localCheckpoint: the capped collect
     fills it, so the Spark tier reads it and never re-scans `names`
@@ -167,7 +169,7 @@ def alias_pairs(
         .withColumn("norm", normalize_name(F.col("name")))
         .localCheckpoint(eager=False)
     )
-    rows = collect_capped(dictionary, driver_threshold)
+    rows = collect_capped(dictionary, LINK_DRIVER_NAMES)
     if rows is not None:
         # via Arrow: a LocalRelation, so reading the pairs back launches
         # no job

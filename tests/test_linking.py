@@ -6,6 +6,7 @@ and the full pipeline's fuzzy links."""
 from __future__ import annotations
 
 import itertools
+import re
 
 import pytest
 from hypothesis import given, settings
@@ -40,10 +41,14 @@ def test_lsh_alias_pairs_finds_near_names(spark):
     assert all(0 < s <= 1 for s in pairs.values())
 
 
+def _norm(s):
+    """The normal form, written independently of normalize_name."""
+    return re.sub(r"[^a-z0-9]", "", s.lower())
+
+
 def _jvm_norms(spark, raw):
     """name → its normal form as the JVM computes it (normalize_name):
-    Spark's lower follows the JVM default locale off the ASCII path, so
-    Python's str.lower is not the definition."""
+    Spark's lower follows the JVM default locale off the ASCII path."""
     from datacapsule_spark.linking import normalize_name
 
     df = spark.createDataFrame([(n,) for n in set(raw)], "name string")
@@ -53,16 +58,16 @@ def _jvm_norms(spark, raw):
     }
 
 
-def _oracle_scores(raw, norms):
+def _oracle_scores(raw, norm=_norm):
     """Brute-force all pairs a < b with gram Jaccard >= LINK_JACCARD,
     scored by that Jaccard."""
     from datacapsule_spark.linking import LINK_JACCARD
 
     # name → char-3-grams of its normal form (>= 3 normal chars only)
     dic = {
-        n: {norms[n][i : i + 3] for i in range(len(norms[n]) - 2)}
+        n: {norm(n)[i : i + 3] for i in range(len(norm(n)) - 2)}
         for n in set(raw)
-        if len(norms[n]) >= 3
+        if len(norm(n)) >= 3
     }
     out = {}
     for a, b in itertools.combinations(sorted(dic), 2):
@@ -73,14 +78,14 @@ def _oracle_scores(raw, norms):
     return out
 
 
-def _oracle_alias_pairs(raw, norms):
+def _oracle_alias_pairs(raw, norm=_norm):
     """alias_pairs by brute force: every name of a non-empty normal form
     paired with its group's min name (score 1.0), plus the fuzzy pairs."""
     groups = {}
     for n in set(raw):
-        if norms[n]:
-            groups.setdefault(norms[n], []).append(n)
-    out = _oracle_scores(raw, norms)
+        if norm(n):
+            groups.setdefault(norm(n), []).append(n)
+    out = _oracle_scores(raw, norm)
     for members in groups.values():
         out.update({(min(members), b): 1.0 for b in members if b != min(members)})
     return out
@@ -134,42 +139,32 @@ def _name_sets(draw):
 @settings(max_examples=15, deadline=None)
 @given(raw=_name_sets())
 def test_fuzzy_alias_pairs_equal_brute_force(spark, threshold, raw):
-    """The prefix-filtered join emits exactly the brute-force pairs with
-    Jaccard >= LINK_JACCARD, with the same scores, at any threshold:
-    prefix length, length filter and verification all follow it."""
-    from datacapsule_spark import linking
-
-    names = spark.createDataFrame([(n,) for n in raw], "name string")
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(linking, "LINK_JACCARD", threshold)
-        got = {
-            (r["a"], r["b"]): r["score"]
-            for r in linking.fuzzy_alias_pairs(names).collect()
-        }
-        want = _oracle_scores(raw, _jvm_norms(spark, raw))
-    _assert_oracle(got, want, threshold)
-
-
-@pytest.mark.parametrize("threshold", [0.5, 0.6, 0.7, 0.9])
-@settings(max_examples=15, deadline=None)
-@given(raw=_name_sets())
-def test_alias_pairs_tiers_equal_brute_force(spark, threshold, raw):
-    """Both tiers of alias_pairs, the Spark joins (driver_threshold=0)
+    """At any threshold, the prefix-filtered join emits exactly the
+    brute-force pairs with Jaccard >= LINK_JACCARD, with the same scores
+    (prefix length, length filter and verification all follow it), and
+    both tiers of alias_pairs, the Spark joins (LINK_DRIVER_NAMES = 0)
     and the driver's plain-Python joins (the default), equal the
     brute-force normal-form stars ∪ fuzzy pairs, and each other exactly,
     schema included."""
     from datacapsule_spark import linking
 
+    # the oracle's normal form is the JVM's under the session locale
+    assert _jvm_norms(spark, raw) == {n: _norm(n) for n in set(raw)}
     names = spark.createDataFrame([(n,) for n in raw], "name string")
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(linking, "LINK_JACCARD", threshold)
-        want = _oracle_alias_pairs(raw, _jvm_norms(spark, raw))
-        spark_tier = linking.alias_pairs(names, driver_threshold=0)
+        fuzzy = {
+            (r["a"], r["b"]): r["score"]
+            for r in linking.fuzzy_alias_pairs(names).collect()
+        }
+        _assert_oracle(fuzzy, _oracle_scores(raw), threshold)
         driver_tier = linking.alias_pairs(names)
+        mp.setattr(linking, "LINK_DRIVER_NAMES", 0)
+        spark_tier = linking.alias_pairs(names)
         got = _pairs(spark_tier)
         assert _pairs(driver_tier) == got
+        _assert_oracle(got, _oracle_alias_pairs(raw), threshold)
     assert driver_tier.schema == spark_tier.schema
-    _assert_oracle(got, want, threshold)
 
 
 _GATE_NAMES = [
@@ -192,7 +187,7 @@ def test_link_driver_tier_launches_at_most_two_jobs(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("link-driver-tier")) <= 2
-    assert got == _oracle_alias_pairs(_GATE_NAMES, _jvm_norms(spark, _GATE_NAMES))
+    assert got == _oracle_alias_pairs(_GATE_NAMES)
 
 
 def test_link_tier_limit_counts_distinct_names(spark, monkeypatch):
@@ -206,24 +201,24 @@ def test_link_tier_limit_counts_distinct_names(spark, monkeypatch):
     monkeypatch.setattr(
         linking, "_driver_alias_pairs", lambda rows: tiers.append("driver") or real(rows)
     )
-    t = len(_GATE_NAMES)
+    monkeypatch.setattr(linking, "LINK_DRIVER_NAMES", len(_GATE_NAMES))
     for raw, tier in (
         (_GATE_NAMES + ["HttpClient"], ["driver"]),
         (_GATE_NAMES + ["StreamBuferWriter"], []),
     ):
         tiers.clear()
         names = spark.createDataFrame([(n,) for n in raw], "name string")
-        got = _pairs(linking.alias_pairs(names, driver_threshold=t))
+        got = _pairs(linking.alias_pairs(names))
         assert tiers == tier
-        assert got == pytest.approx(_oracle_alias_pairs(raw, _jvm_norms(spark, raw)))
+        assert got == pytest.approx(_oracle_alias_pairs(raw))
 
 
-def test_link_tiers_take_the_norm_from_the_jvm(spark):
+def test_link_tiers_take_the_norm_from_the_jvm(spark, monkeypatch):
     """Under a Turkish JVM default locale Spark lowercases 'I' in a
     non-ASCII string to dotless 'ı', which the normal form drops, where
     Python's str.lower gives 'i'. Both tiers follow the JVM: ÉFILE
     links to fle (norm fle), not to file."""
-    from datacapsule_spark.linking import alias_pairs
+    from datacapsule_spark import linking
 
     Locale = spark.sparkContext._jvm.java.util.Locale
     default = Locale.getDefault()
@@ -232,11 +227,14 @@ def test_link_tiers_take_the_norm_from_the_jvm(spark):
     Locale.setDefault(Locale.forLanguageTag("tr"))
     try:
         norms = _jvm_norms(spark, raw)
-        tiers = [_pairs(alias_pairs(names, driver_threshold=t)) for t in (0, len(raw))]
+        tiers = []
+        for limit in (0, len(raw)):
+            monkeypatch.setattr(linking, "LINK_DRIVER_NAMES", limit)
+            tiers.append(_pairs(linking.alias_pairs(names)))
     finally:
         Locale.setDefault(default)
     assert norms["\u00c9FILE"] == "fle"
-    want = _oracle_alias_pairs(raw, norms)
+    want = _oracle_alias_pairs(raw, norms.__getitem__)
     assert ("fle", "\u00c9FILE") in want
     assert tiers == [want, want]
 

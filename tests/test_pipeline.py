@@ -230,13 +230,11 @@ def test_split_stream_canon_equals_full_dedup(spark, smoke_repos):
 
 def test_link_tiers_give_identical_boundaries(spark, tmp_path, monkeypatch):
     """A build that links on the driver and one forced onto the Spark
-    tier (driver_threshold=0) write identical 20_link, 30_canonicalize
+    tier (LINK_DRIVER_NAMES = 0) write identical 20_link, 30_canonicalize
     and 40_canon_edges rows under identical marker schemas."""
-    import functools
     import json
 
     import datacapsule_spark.linking as L
-    import datacapsule_spark.pipeline as P
     from datacapsule_spark.corpus import generate_row, symbol_vocab
 
     vocab = symbol_vocab()
@@ -254,9 +252,8 @@ def test_link_tiers_give_identical_boundaries(spark, tmp_path, monkeypatch):
         L, "_driver_alias_pairs", lambda r: tiers.append("driver") or real(r)
     )
     out = {}
-    for tier, link in (("driver", L.alias_pairs),
-                       ("spark", functools.partial(L.alias_pairs, driver_threshold=0))):
-        monkeypatch.setattr(P, "alias_pairs", link)
+    for tier, limit in (("driver", L.LINK_DRIVER_NAMES), ("spark", 0)):
+        monkeypatch.setattr(L, "LINK_DRIVER_NAMES", limit)
         work = tmp_path / tier
         run_pipeline(spark, repos, str(work))
         out[tier] = {
