@@ -198,16 +198,14 @@ def apply_canonical(
     df: DataFrame,
     mapping: DataFrame,
     cols: list[str],
-    broadcast: bool = True,
     flag: str | None = None,
 ) -> DataFrame:
     """Rewrite id columns through the canonical mapping (left join +
     coalesce — ids not in any component map to themselves).
 
     The mapping is the alias dictionary: O(distinct aliased names),
-    orders of magnitude smaller than the triple stream — broadcast it
-    so the rewrite is map-side (no shuffle of df). Pass broadcast=False
-    only if the alias map outgrows executor memory.
+    orders of magnitude smaller than the triple stream — always
+    broadcast, so the rewrite is map-side (no shuffle of df).
 
     flag: optional boolean output column, true iff ANY of `cols` hit
     the mapping (including identity hits on canonical ids themselves —
@@ -220,9 +218,7 @@ def apply_canonical(
         m = mapping.select(
             F.col("node_id").alias(c), F.col("canonical_id").alias(f"_canon_{c}")
         )
-        if broadcast:
-            m = F.broadcast(m)
-        out = out.join(m, c, "left")
+        out = out.join(F.broadcast(m), c, "left")
         if flag:
             out = out.withColumn(f"_hit_{c}", F.col(f"_canon_{c}").isNotNull())
         out = out.withColumn(

@@ -169,13 +169,6 @@ def _dirs_of(path: str) -> list[str]:
     return out
 
 
-def _norm_symbol(name: str) -> str:
-    """Case/underscore-insensitive normal form used for entity linking
-    blocking (HttpClient ≡ http_client). NOT applied at extraction time —
-    linking is a separate stage (linking.py)."""
-    return re.sub(r"[^a-z0-9]", "", name.lower())
-
-
 # ---------------------------------------------------------------- extract
 
 def _iter_imports(lang: str, line: str):

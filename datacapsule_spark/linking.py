@@ -45,10 +45,10 @@ LINK_JACCARD = 0.7
 
 # Largest name dictionary linked on the driver. bench/link_tiers.py
 # (fresh JVMs, 4 cores, names from 24 common words) found no crossover:
-# the driver tier was faster at every size from 2k to 80k names (893 s
-# against > 1000 s for the Spark tier at 80k, at 546 MB peak driver
-# RSS), so this is the largest size measured. Above it the Spark tier
-# runs: the only path for a dictionary that does not fit in driver
+# the driver tier was faster at every size from 2k to 80k names (40k:
+# 180 s against 489 s for the Spark tier; 80k: 893 s at 546 MB peak
+# driver RSS), so this is the largest size measured. Above it the Spark
+# tier runs: the only path for a dictionary that does not fit in driver
 # memory. See bench/BASELINE.md "Linking tiers".
 LINK_DRIVER_NAMES = 80_000
 
@@ -89,8 +89,9 @@ def fuzzy_alias_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
     frequency over the name dictionary, ties by gram); a pair with
     J >= t shares at least ⌈t·|A|⌉ grams, so it shares one of A's first
     |A| − ⌈t·|A|⌉ + 1 grams (the prefix). The prefix grams are exploded
-    and self-joined under the length filter t·|A| <= |B| <= |A|/t, and
-    the exact array_intersect/array_union Jaccard verifies each pair.
+    and self-joined under the length filter t·|A| <= |B| <= |A|/t; the
+    distinct candidate pairs then pick up both gram sets and the exact
+    array_intersect/array_union Jaccard verifies each pair once.
     Prefix, length filter and verification all derive from the one
     threshold, so there is no separate candidate cut.
 
@@ -117,18 +118,18 @@ def fuzzy_alias_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
         .select("name", F.col("o.g").alias("grams"), F.size("o").alias("n"))
         .localCheckpoint(eager=True)
     )
+    # only (name, n) rides through the prefix join: a pair sharing k
+    # prefix grams comes out k times, so it is distinct()ed before the
+    # gram sets join back and the Jaccard runs once per pair
     prefix = sets.select(
         "name",
-        "grams",
         "n",
         F.explode(
             F.slice("grams", 1, F.col("n") - F.ceil(F.col("n") * t).cast("int") + 1)
         ).alias("p"),
     )
     A, B = prefix.alias("A"), prefix.alias("B")
-    ga, gb = F.col("A.grams"), F.col("B.grams")
-    jac = F.size(F.array_intersect(ga, gb)) / F.size(F.array_union(ga, gb))
-    return (
+    cands = (
         A.join(
             B,
             (F.col("A.p") == F.col("B.p"))
@@ -136,9 +137,16 @@ def fuzzy_alias_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
             & (F.col("B.n") >= F.col("A.n") * t)
             & (F.col("A.n") >= F.col("B.n") * t),
         )
-        .select(F.col("A.name").alias("a"), F.col("B.name").alias("b"), jac.alias("score"))
+        .select(F.col("A.name").alias("a"), F.col("B.name").alias("b"))
+        .distinct()
+    )
+    ga, gb = F.col("ga"), F.col("gb")
+    jac = F.size(F.array_intersect(ga, gb)) / F.size(F.array_union(ga, gb))
+    return (
+        cands.join(sets.select(F.col("name").alias("a"), F.col("grams").alias("ga")), "a")
+        .join(sets.select(F.col("name").alias("b"), F.col("grams").alias("gb")), "b")
+        .select("a", "b", jac.alias("score"))
         .where(F.col("score") >= LINK_JACCARD)
-        .dropDuplicates(["a", "b"])
     )
 
 

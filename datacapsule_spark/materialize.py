@@ -126,34 +126,30 @@ def build_relational(triples: DataFrame) -> dict[str, DataFrame]:
     26s@4 / 13s@16 cores bought back at 29.6M triples)."""
     files = triples.where(F.col("subj_type") == "file")
 
-    # entities ≈ species: one row per file entity, with year/author attrs
-    year = (
-        files.where(F.col("pred") == "named_in")
-        .select(
-            "subj",
-            F.regexp_replace("obj", "^year:", "").cast("int").alias("naming_year"),
-        )
-        .groupBy("subj")
-        .agg(F.min("naming_year").alias("naming_year"))
-    )
-    author = (
-        files.where(F.col("pred") == "authored_by")
-        .select("subj", F.regexp_replace("obj", "^author:", "").alias("author"))
-        .groupBy("subj")
-        .agg(F.min("author").alias("author"))
-    )
-    # every file emits exactly one has_loc triple (extraction_schema.py:
-    # 333, unconditional) carrying the same (repo, path, lang) as all of
-    # the file's rows — restricting to that pred reads 1 of 10 pred
-    # partitions for an identical result
-    base = files.where(F.col("pred") == "has_loc").groupBy("subj").agg(
-        F.first("repo").alias("repo"),
-        F.min("path").alias("first_path"),
-        F.first("lang").alias("lang"),
-    )
+    # entities ≈ species: one row per file entity, with year/author
+    # attrs, in ONE aggregation over the three preds it reads (a groupBy
+    # per pred joined back together took 6 jobs; this takes 2). Every
+    # file emits exactly one has_loc triple (extract_file, unconditional)
+    # carrying the same (repo, path, lang) as all of the file's rows, so
+    # those come off it; a subject without one is not a file entity.
+    pred = F.col("pred")
+    loc, named, authored = pred == "has_loc", pred == "named_in", pred == "authored_by"
     entities = (
-        base.join(year, "subj", "left")
-        .join(author, "subj", "left")
+        files.where(pred.isin("has_loc", "named_in", "authored_by"))
+        .groupBy("subj")
+        .agg(
+            F.bool_or(loc).alias("_loc"),
+            F.first(F.when(loc, F.col("repo")), ignorenulls=True).alias("repo"),
+            F.min(F.when(loc, F.col("path"))).alias("first_path"),
+            F.first(F.when(loc, F.col("lang")), ignorenulls=True).alias("lang"),
+            F.min(
+                F.when(named, F.regexp_replace("obj", "^year:", "").cast("int"))
+            ).alias("naming_year"),
+            F.min(
+                F.when(authored, F.regexp_replace("obj", "^author:", ""))
+            ).alias("author"),
+        )
+        .where("_loc")
         .select(
             F.xxhash64("subj").alias("entity_id"),
             F.col("subj").alias("name"),
@@ -309,39 +305,3 @@ def write_graph(
         return
     nodes.write.mode(mode).partitionBy("node_type").parquet(f"{base_dir}/nodes")
     edges.write.mode(mode).partitionBy("relation").parquet(f"{base_dir}/edges")
-
-
-def write_graph_bucketed(
-    nodes: DataFrame,
-    edges: DataFrame,
-    db: str,
-    n_buckets: int = 64,
-    mode: str = "overwrite",
-) -> tuple[str, str]:
-    """Bucketed catalog sink: nodes bucketed+sorted on node_id, edges
-    on src, SAME bucket count — so every downstream traversal join
-    (edges.src = nodes.node_id, the G1-G4 hop shape) is co-located:
-    Catalyst plans a SortMergeJoin with ZERO shuffle Exchange on
-    either side (asserted in tests/test_plans.py). At 100 TB this is
-    the difference between re-shuffling the edge table per hop and
-    reading pre-placed buckets; the Iceberg analog is
-    `partitionedBy(bucket(N, col))` via write_graph(iceberg=True).
-
-    Returns the two table names. Bucketing requires a catalog table
-    (saveAsTable) — plain .parquet(path) cannot carry bucket metadata."""
-    spark = nodes.sparkSession
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    nodes_t, edges_t = f"{db}.nodes_b", f"{db}.edges_b"
-    (
-        nodes.write.mode(mode)
-        .bucketBy(n_buckets, "node_id")
-        .sortBy("node_id")
-        .saveAsTable(nodes_t)
-    )
-    (
-        edges.write.mode(mode)
-        .bucketBy(n_buckets, "src")
-        .sortBy("src")
-        .saveAsTable(edges_t)
-    )
-    return nodes_t, edges_t

@@ -5,14 +5,14 @@ The in-memory path (dedup.minhash_lsh_pairs) re-shingles everything per
 run — right for one-off screens, wrong for a corpus that grows daily:
 at 100 TB the standing corpus' signatures are a sunk cost that should
 be paid once. This module materializes the band table (the exact
-analogue of retrieval.py's BM25 postings and vector_store's log):
+analogue of retrieval.py's BM25 postings):
 
 - `<path>/bands`  — (doc_id, band_idx, band_hash, _version),
   partitioned by band_idx (a probe for one band prunes to its
   partition; band_hash min/max footers skip row groups).
 - `<path>/docs`   — the version log (doc_id, _version, _deleted):
-  latest version wins, tombstone deletes — vector_store.read's window,
-  shared contract with the BM25 index.
+  latest version wins, tombstone deletes — the contract of the BM25
+  index's doclens log.
 - `<path>/params` — one row per write batch (n_hashes, shingle_n,
   n_bands, rows_per_band, hash_fn); probes and upserts re-read the
   FIRST build's params so every batch bands identically.
@@ -82,7 +82,7 @@ def _params(spark: SparkSession, path: str):
 
 def _resolved_docs(spark: SparkSession, path: str) -> DataFrame:
     """Latest (doc_id, _version) wins, tombstones dropped; ties resolve
-    tombstone-wins (vector_store.read's window)."""
+    tombstone-wins (as the BM25 doclens log does)."""
     from pyspark.sql import Window
 
     log = spark.read.parquet(f"{path}/docs")
@@ -119,7 +119,7 @@ def upsert_lsh_index(
     rows and doc-log rows append stamped `version`; the docs' previous
     bands stop matching through the resolution join. Versions are
     caller-supplied and must be strictly higher than any prior version
-    of the same doc (the BM25/vector_store contract)."""
+    of the same doc (the BM25 index's contract)."""
     p = _params(docs.sparkSession, path)
     build_lsh_index(
         docs, path, n_hashes=p["n_hashes"], shingle_n=p["shingle_n"],

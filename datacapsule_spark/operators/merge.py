@@ -23,8 +23,9 @@ one-line writeTo swap when a catalog exists):
   overwrite; every other partition's files are untouched (asserted by
   test on file mtimes+sizes).
 
-vector_store.py is the row-versioned (log-structured) alternative for
-high-frequency small upserts; this is the batch-merge shape.
+A row-versioned (log-structured) table read through latest_by_key is
+the alternative for high-frequency small upserts; this is the
+batch-merge shape.
 """
 
 from __future__ import annotations
@@ -120,8 +121,8 @@ def latest_by_key(
     append-only (versioned) table: row_number over order_cols
     descending, keep rank 1. One shuffle on the key; the per-key sort
     is partial (window partition), never global. Pair with
-    merge_into_partitioned (compacted upsert) or vector_store.py
-    (log-structured) depending on write cadence."""
+    merge_into_partitioned (compacted upsert) or an append-only
+    versioned log depending on write cadence."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(*key_cols).orderBy(

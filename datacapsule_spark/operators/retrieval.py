@@ -53,9 +53,8 @@ def build_bm25_index(
     any inverted-index build pays. Nothing global is stored: per-term
     df is recomputed by each query from its own postings slice, and
     the corpus constants (n, avgdl) derive from the RESOLVED doclens
-    at query time — so upserts and tombstones (the vector_store
-    supersede pattern, r04 VERDICT item 7) are honored without any
-    global rewrite. doclens is the version log: latest (doc_id,
+    at query time — so upserts and tombstones (a higher version
+    supersedes) are honored without any global rewrite. doclens is the version log: latest (doc_id,
     _version) wins at read, and postings join on that pair, so a
     superseded doc's old postings drop out without being touched."""
     toks = docs.select(
@@ -110,7 +109,7 @@ def append_bm25_index(
 
 def _resolved_doclens(spark: SparkSession, path: str) -> DataFrame:
     """Resolved view of the doclens version log: latest (doc_id,
-    _version) wins, tombstones dropped — vector_store.read's window.
+    _version) wins, tombstones dropped.
     Pre-versioning layouts read as everything-at-version-0. Keeps the
     _version column (postings resolve through it)."""
     from pyspark.sql import Window
@@ -132,11 +131,10 @@ def compact_bm25_index(spark: SparkSession, path: str) -> int:
     """Fold the version log into a resolved snapshot: superseded and
     tombstoned doclens rows AND their postings are physically removed,
     everything restamped version 0, stats reset to one row. The
-    maintenance job, not the write path (vector_store.compact's
-    contract; on Iceberg this is rewrite_data_files + snapshot
-    expiry). Queries before and after are identical by construction —
+    maintenance job, not the write path (on Iceberg this is
+    rewrite_data_files + snapshot expiry). Queries before and after are identical by construction —
     the read path resolves to the same live set either way
-    (pytest-pinned). Swap is rename-aside like layout.compact_dataset:
+    (pytest-pinned). Swap is rename-aside:
     a full copy of the index exists on disk at every instant. Returns
     the live doc count."""
     import os
@@ -207,7 +205,7 @@ def upsert_bm25_index(
     highest doclens version per doc wins and postings resolve through
     that pair, so the doc's previous postings stop scoring without
     being rewritten (compaction is a maintenance job, not the write
-    path — exactly vector_store.upsert's contract). Versions are
+    path). Versions are
     caller-supplied and must be STRICTLY higher than any prior version
     of the same doc; re-upserting a doc at an unchanged version is
     undefined (both copies' postings would resolve). Pre-versioning
@@ -227,7 +225,7 @@ def delete_bm25_docs(
     """Append doclens tombstones for `ids` at `version` — the docs stop
     scoring immediately (their postings fail the version-resolution
     join); O(batch) I/O, no postings touched. Same-version ties
-    resolve tombstone-wins, like vector_store.read. Pre-versioning
+    resolve tombstone-wins. Pre-versioning
     indexes are refused (see _require_versioned)."""
     _require_versioned(spark, path)
     tomb = spark.createDataFrame(
@@ -266,7 +264,7 @@ def bm25_index_topk(
         .collect()[0][0]
     )
     # resolve the doclens version log (latest per doc wins, tombstones
-    # drop — vector_store.read's window) and derive the corpus
+    # drop) and derive the corpus
     # constants from the RESOLVED view, so upserted/deleted docs are
     # excluded from n/avgdl too, not just from scoring. doclens is one
     # skinny row per live doc; at scale write it bucketed by doc_id

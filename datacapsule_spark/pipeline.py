@@ -354,13 +354,10 @@ def main() -> None:
     args = ap.parse_args()
 
     from .session import get_spark
+    from .sources.repos import read_repos
 
     spark = get_spark("datacapsule-pipeline", shuffle_partitions=args.shuffle_partitions)
-    repos = (
-        spark.read.table(args.input)
-        if "." in args.input and not args.input.endswith(".parquet")
-        else spark.read.parquet(args.input)
-    )
+    repos = read_repos(spark, args.input)
     if args.incremental:
         out = run_incremental(
             spark, repos, args.output,

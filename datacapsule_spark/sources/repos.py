@@ -9,9 +9,10 @@ Synthetic-corpus generation lives in datacapsule_spark.corpus.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
-from ..corpus import ensure_corpus, generate_rows, write_corpus_spark  # noqa: F401
 from ..schema import REPOS
 
 _EXPECTED = {f.name for f in REPOS.fields}
@@ -19,8 +20,11 @@ _EXPECTED = {f.name for f in REPOS.fields}
 
 def read_repos(spark: SparkSession, source: str) -> DataFrame:
     """Read the repos table from an Iceberg/catalog identifier or a
-    parquet path, validating the (repo, path, commit, lang, content)
-    contract."""
+    parquet path (one with a '/', a .parquet suffix, or an existing
+    local file or directory), validating the (repo, path, commit, lang,
+    content) contract."""
+    if os.path.exists(source):
+        source = os.path.abspath(source)  # the JVM's cwd need not be ours
     if source.endswith(".parquet") or "/" in source:
         df = spark.read.parquet(source)
     else:

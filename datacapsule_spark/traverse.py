@@ -174,12 +174,6 @@ def find_nodes_by_node_type(
     return hits.distinct()
 
 
-def get_node_attribute(nodes: DataFrame, node_id: str) -> DataFrame:
-    """G3: point lookup (react_tools.py:184-190) — partition-pruned
-    filter, no collect."""
-    return nodes.where(F.col("node_id") == node_id)
-
-
 def get_adjacent_descriptions(
     nodes: DataFrame, edges: DataFrame, names: DataFrame
 ) -> DataFrame:
@@ -197,9 +191,3 @@ def get_adjacent_descriptions(
         F.array_sort(F.collect_set("nbr_name")).alias("descriptions"),
         F.count("*").alias("n_neighbors"),
     )
-
-
-def nodes_count(nodes: DataFrame, node_type: str | None = None) -> int:
-    """A1 (dspy_inference.py:144-154)."""
-    df = nodes if node_type is None else nodes.where(F.col("node_type") == node_type)
-    return df.count()

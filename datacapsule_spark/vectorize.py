@@ -15,10 +15,9 @@ Replaces the reference's in-RAM JSON vector store + O(N) python loop
 
 Scale path: the scoring is a JVM-side higher-order-function reduction
 (zip_with + aggregate) — no Python in the hot loop; top-k compiles to
-TakeOrderedAndProject (no global sort). For repeated serving queries,
-`lsh_bucketed_topk` pre-blocks with random-hyperplane signatures so
-each query scores only its bucket (candidate set << N), then re-ranks
-exactly.
+TakeOrderedAndProject (no global sort). `hyperplane_signatures`
+(random-hyperplane bucket ids) is the blocking key of
+`dedup.embedding_cosine_pairs`.
 """
 
 from __future__ import annotations
@@ -76,22 +75,6 @@ def node_descriptors(nodes: DataFrame) -> DataFrame:
             F.concat(F.lit("entity id: "), F.col("node_id")),
             F.concat(F.lit("type: "), F.col("node_type")),
             F.concat(F.lit("name: "), F.col("name")),
-        ).alias("text"),
-    )
-
-
-def edge_descriptors(edges: DataFrame) -> DataFrame:
-    """Relation descriptor text, mirrors react_tools.py:265-267."""
-    return edges.select(
-        F.concat_ws("->", "src", "relation", "dst").alias("id"),
-        F.lit("relation").alias("kind"),
-        F.col("relation").alias("entity_type"),
-        F.col("relation").alias("name"),
-        F.concat_ws(
-            ", ",
-            F.concat(F.lit("relation: from "), F.col("src")),
-            F.concat(F.lit("to "), F.col("dst")),
-            F.concat(F.lit("type: "), F.col("relation")),
         ).alias("text"),
     )
 
@@ -609,7 +592,7 @@ def ann_recall_at_k(
     )
 
 
-# ------------------------------------------- LSH-bucketed ANN (scale path)
+# ------------------------------- random-hyperplane signatures (blocking)
 
 def hyperplane_signatures(
     embeddings: DataFrame,
@@ -635,31 +618,6 @@ def hyperplane_signatures(
         )
         sig = sig + F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
     return embeddings.withColumn(out_col, sig)
-
-
-def lsh_bucketed_topk(
-    embeddings_with_buckets: DataFrame,
-    query_vec,
-    k: int = 10,
-    n_planes: int = 8,
-    seed: int = 42,
-    probe_hamming: int = 1,
-) -> DataFrame:
-    """ANN: score only vectors whose bucket is within `probe_hamming`
-    bit-flips of the query's bucket, then exact re-rank. Bucket column
-    must come from hyperplane_signatures with the same seed/planes."""
-    dim = len(query_vec)
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(n_planes, dim)
-    planes /= np.linalg.norm(planes, axis=1, keepdims=True)
-    q = np.asarray(query_vec, dtype=np.float64)
-    qsig = sum((1 << i) for i in range(n_planes) if planes[i] @ q >= 0)
-    buckets = {qsig}
-    if probe_hamming >= 1:
-        for i in range(n_planes):
-            buckets.add(qsig ^ (1 << i))
-    cand = embeddings_with_buckets.where(F.col("bucket").isin(list(buckets)))
-    return cosine_topk(cand.drop("bucket"), query_vec, k=k)
 
 
 # ------------------------------------------- int8 quantization (scale path)

@@ -1,6 +1,6 @@
 """Incremental LSH dedup index: every read equals the from-scratch
 in-memory computation on the live corpus, across any build → upsert →
-delete → compact history (the retrieval.py / vector_store contract,
+delete → compact history (the retrieval.py BM25 index contract,
 applied to near-dup banding)."""
 
 from __future__ import annotations

@@ -914,25 +914,6 @@ class TestVector:
         assert len(got) == 10
         assert all(r["entity_type"] == "symbol" for r in got)
 
-    def test_lsh_bucketed_ann_recall(self, spark):
-        from datacapsule_spark.vectorize import (
-            cosine_topk,
-            hash_embed_text,
-            hyperplane_signatures,
-            lsh_bucketed_topk,
-        )
-
-        _, df = self._embeddings(spark, n=200)
-        q = hash_embed_text("name7", 16)
-        exact = [r["id"] for r in cosine_topk(df, q, k=1).collect()]
-        bucketed = hyperplane_signatures(df, n_planes=6, dim=16)
-        approx = [
-            r["id"]
-            for r in lsh_bucketed_topk(bucketed, q, k=1, n_planes=6).collect()
-        ]
-        # the query IS name7's vector → its own bucket contains it
-        assert exact[0] == "e7" and approx[0] == "e7"
-
     def test_embed_descriptors_deterministic(self, spark):
         from datacapsule_spark.vectorize import (
             embed_descriptors,

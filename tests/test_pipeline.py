@@ -228,6 +228,61 @@ def test_split_stream_canon_equals_full_dedup(spark, smoke_repos):
     assert len(split) == len({(s, p, o) for s, p, o, *_ in split})
 
 
+def test_entities_equal_python_oracle(spark):
+    """build_relational's entities table, row for row, against a plain
+    Python pivot of the canonical triples: one row per file subject
+    that has a has_loc triple, (repo, lang, path) off that triple,
+    naming_year / author the min of its named_in / authored_by objects
+    or NULL. Covers files with no named_in or authored_by, a file
+    subject without has_loc (not an entity) and a non-file subject
+    carrying the same preds (not an entity)."""
+    from datacapsule_spark.corpus import generate_rows
+    from datacapsule_spark.extraction_schema import extract_file
+    from datacapsule_spark.materialize import build_relational
+    from datacapsule_spark.schema import TRIPLES_RAW
+
+    triples = [t for row in generate_rows(30) for t in extract_file(*row)]
+
+    def row(subj, pred, obj, subj_type="file"):
+        return {"subj": subj, "pred": pred, "obj": obj, "subj_type": subj_type,
+                "obj_type": obj.split(":")[0], "repo": "o/r", "path": "p.py",
+                "commit": "c" * 40, "lang": "python", "content_sha256": "0" * 64}
+
+    triples += [
+        row("file:o/r/no_loc.py", "named_in", "year:1999"),
+        row("file:o/r/no_loc.py", "authored_by", "author:Ann"),
+        row("dir:o/r/src", "has_loc", "loc:7", subj_type="dir"),
+        row("dir:o/r/src", "named_in", "year:2000", subj_type="dir"),
+    ]
+
+    by_subj = {}
+    for t in triples:
+        if t["subj_type"] == "file":
+            by_subj.setdefault(t["subj"], []).append(t)
+    want = set()
+    for subj, ts in by_subj.items():
+        locs = [t for t in ts if t["pred"] == "has_loc"]
+        if not locs:
+            continue
+        years = [int(t["obj"][len("year:"):]) for t in ts if t["pred"] == "named_in"]
+        authors = [t["obj"][len("author:"):] for t in ts if t["pred"] == "authored_by"]
+        want.add((subj, "file", locs[0]["lang"], locs[0]["repo"],
+                  min(t["path"] for t in locs),
+                  min(years, default=None), min(authors, default=None)))
+    assert any(w[5] is None for w in want) and any(w[6] is None for w in want)
+    assert any(w[5] is not None for w in want) and any(w[6] is not None for w in want)
+
+    df = spark.createDataFrame([tuple(t[f.name] for f in TRIPLES_RAW.fields)
+                                for t in triples], TRIPLES_RAW)
+    entities = build_relational(df)["entities"]
+    got = entities.select(
+        "name", "kind", "lang", "repo", "first_path", "naming_year", "author"
+    ).collect()
+    assert len(got) == len(want) == 30
+    assert set(map(tuple, got)) == want
+    assert entities.where(F.col("entity_id") != F.xxhash64("name")).count() == 0
+
+
 def test_link_tiers_give_identical_boundaries(spark, tmp_path, monkeypatch):
     """A build that links on the driver and one forced onto the Spark
     tier (LINK_DRIVER_NAMES = 0) write identical 20_link, 30_canonicalize

@@ -250,41 +250,6 @@ def test_sample_by_hash_no_shuffle(spark, tmp_path):
     assert r.exchanges == 0, r.text
 
 
-def test_bucketed_graph_join_no_shuffle(spark):
-    """write_graph_bucketed places nodes (node_id) and edges (src) in
-    the SAME bucket layout — the hop join must plan as a SortMergeJoin
-    with ZERO shuffle Exchange on either side."""
-    from pyspark.sql import functions as F
-
-    from datacapsule_spark.materialize import write_graph_bucketed
-
-    nodes = spark.range(0, 200).select(
-        F.concat(F.lit("n"), "id").alias("node_id"),
-        F.lit("file").alias("node_type"),
-    )
-    edges = spark.range(0, 500).select(
-        F.concat(F.lit("n"), (F.col("id") % 200)).alias("src"),
-        F.lit("calls").alias("relation"),
-        F.concat(F.lit("n"), ((F.col("id") + 7) % 200)).alias("dst"),
-    )
-    nodes_t, edges_t = write_graph_bucketed(nodes, edges, "bucket_test", n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        e = spark.table(edges_t)
-        n = spark.table(nodes_t)
-        joined = e.join(n, e.src == n.node_id).select("src", "dst", "node_type")
-        r = explain_report(joined)
-        assert r.sort_merge_joins == 1, r.text
-        assert r.exchanges == 0, r.text
-        assert joined.count() == 500
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bucket_test.nodes_b")
-        spark.sql("DROP TABLE IF EXISTS bucket_test.edges_b")
-        spark.sql("DROP DATABASE IF EXISTS bucket_test")
-
-
 def test_ivf_partitioned_probe_prunes(spark, tmp_path):
     """The IVF layout's point at 100 TB: written partitioned by
     list_id, a probe's list_id IN (...) predicate must become a
@@ -400,13 +365,20 @@ def test_pack_sequences_single_exchange(spark):
     assert r.exchanges == 1, r.text
 
 
-def test_read_repos_contract(spark, smoke_corpus_path):
+def test_read_repos_contract(spark, smoke_corpus_path, smoke_repos, tmp_path, monkeypatch):
     from datacapsule_spark.sources.repos import read_repos
 
     df = read_repos(spark, smoke_corpus_path)
     assert set(df.columns) == {"repo", "path", "commit", "lang", "content"}
     with pytest.raises(Exception):
         read_repos(spark, "/root/testdata/sf0.001/events.parquet")
+    # neither a dot in a directory path nor a bare relative directory
+    # name is a catalog identifier
+    src = tmp_path / "a.d" / "repos"
+    smoke_repos.limit(5).write.parquet(str(src))
+    assert read_repos(spark, str(src)).count() == 5
+    monkeypatch.chdir(src.parent)
+    assert read_repos(spark, "repos").count() == 5
 
 
 def test_latest_per_user_single_window_exchange(spark):
