@@ -41,7 +41,13 @@ pattern):
   cached tables.
 
 Both tiers return the same answers (tests/test_serving_index.py).
-query_database always runs on Spark.
+
+query_database has the same two tiers under the same limit
+(``sql_tier.DriverSQL``): a statement whose analyzed Spark plan stays in
+a small allowlist runs in an in-process DuckDB over Arrow snapshots of
+the registered views (taken on a view's second such query, each at most
+``driver_threshold`` rows), compiled from the plan, not from the text.
+Everything else runs on Spark. Both tiers stop a query at SQL_DEADLINE_S.
 
 The X5 ReAct loop itself is LLM orchestration, not engine code; these
 are the engine entry points it calls.
@@ -54,16 +60,20 @@ import os
 import re
 import tempfile
 import threading
+import uuid
 from collections import Counter
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.errors import ParseException
 from pyspark.errors.exceptions.captured import capture_sql_exception
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .canonicalize import collect_capped
+from .sql_tier import DriverSQL
 from .traverse import NODE_HIERARCHY
 from .traverse import find_nodes_by_node_type as _bfs
 from .traverse import get_adjacent_descriptions
@@ -76,6 +86,8 @@ from .vectorize import cosine_topk, hash_embed_text
 DRIVER_THRESHOLD = 500_000
 # query_database collects at most this many rows ("truncated": True beyond).
 MAX_SQL_ROWS = 10_000
+# query_database stops a query that runs longer (seconds; read per call)
+SQL_DEADLINE_S = 60.0
 MAX_HOPS = 7  # traverse.find_nodes_by_node_type's default
 
 
@@ -88,6 +100,40 @@ def _segments(ptr: np.ndarray, sel: np.ndarray):
     return np.repeat(lo - ends + n, n) + np.arange(ends[-1] if len(n) else 0), n
 
 
+@contextmanager
+def _deadline(stop):
+    """Call ``stop`` (once) if the block outlasts SQL_DEADLINE_S; the
+    block's error is then reported as the deadline."""
+    limit = SQL_DEADLINE_S
+    lock = threading.Lock()
+    state = {"running": True, "fired": False}
+
+    def fire():
+        with lock:
+            if state["running"]:
+                state["fired"] = True
+                stop()
+
+    timer = threading.Timer(limit, fire)
+    timer.daemon = True
+    timer.start()
+    try:
+        yield
+    except Exception as e:
+        if state["fired"]:
+            raise TimeoutError(f"query stopped at the {limit} s deadline") from e
+        raise
+    finally:
+        with lock:
+            state["running"] = False
+        timer.cancel()
+
+
+def _objects(table: pa.Table, col: str) -> np.ndarray:
+    """A column of an Arrow table as an object array (None for NULL)."""
+    return np.asarray(table[col].to_pylist(), dtype=object)
+
+
 class _ServingIndex:
     """Driver-resident snapshot of a warehouse. Read-only once built;
     the one mutation, the lazy adjacency build, runs under a lock.
@@ -98,7 +144,7 @@ class _ServingIndex:
     each type separately (exactly what the Spark tier's joins do).
     """
 
-    def __init__(self, rows: list, hierarchy: dict[str, int], emb: pd.DataFrame | None):
+    def __init__(self, rows: list, hierarchy: dict[str, int], emb: pa.Table | None):
         self.total = len(rows)
         self.type_counts = Counter(r["node_type"] for r in rows)
         self.first_row: dict = {}  # node_id → its first row, as Spark's first()
@@ -135,9 +181,7 @@ class _ServingIndex:
             self.emb = {
                 "mat": mat,
                 "norm": np.sqrt(np.einsum("ij,ij->i", mat, mat)),
-                "id": emb["id"].to_numpy(dtype=object),
-                "entity_type": emb["entity_type"].to_numpy(dtype=object),
-                "name": emb["name"].to_numpy(dtype=object),
+                **{c: _objects(emb, c) for c in ("id", "entity_type", "name")},
             }
 
         self._adj = None  # (ptr, adj, phantom positions), built by graph()
@@ -153,7 +197,7 @@ class _ServingIndex:
                 if self._adj is None:
                     e = collect_capped(edges.select("src", "dst"), cap, arrow=True)
                     self._adj = False if e is None else self._build_adjacency(
-                        e["src"].to_numpy(dtype=object), e["dst"].to_numpy(dtype=object))
+                        _objects(e, "src"), _objects(e, "dst"))
         return self._adj or None
 
     def _build_adjacency(self, src: np.ndarray, dst: np.ndarray):
@@ -284,6 +328,8 @@ class DatacapsuleAPI:
                 driver_threshold, arrow=True)
         self._index = None if rows is None else _ServingIndex(
             rows, hierarchy or NODE_HIERARCHY, emb)
+        # query_database's driver tier: snapshots of the registered views
+        self._sql = DriverSQL(driver_threshold) if driver_threshold > 0 else None
         if self._index is None:
             nodes.cache()
             edges.cache()
@@ -411,7 +457,11 @@ class DatacapsuleAPI:
         parser) runs: a SET, CACHE TABLE, DROP VIEW, CREATE or INSERT
         comes back as an error envelope without executing. At most
         MAX_SQL_ROWS rows are collected; a cut result carries
-        "truncated": True."""
+        "truncated": True. A query still running at SQL_DEADLINE_S is
+        stopped and comes back as an error envelope.
+
+        Spark analyzes every statement; the driver tier (``self._sql``)
+        answers it from DuckDB when it can, and Spark otherwise."""
         cleaned = re.sub(r"```sql\s*", "", sql)
         cleaned = re.sub(r"```\s*$", "", cleaned.strip())
         try:
@@ -421,19 +471,51 @@ class DatacapsuleAPI:
                 capture_sql_exception(parse)(stmt)
             except ParseException as e:
                 raise ValueError(f"only a single read-only query is allowed: {e}") from e
-            rows = self.spark.sql(stmt).limit(MAX_SQL_ROWS + 1).collect()
-            results = [r.asDict(recursive=True) for r in rows[:MAX_SQL_ROWS]]
+            df = self.spark.sql(stmt)
+            results = self._driver_rows(df)
+            if results is None:
+                results = self._spark_rows(df)
             env = {
                 "success": True,
                 "generated_sql": cleaned,
-                "results": results,
-                "row_count": len(results),
+                "results": results[:MAX_SQL_ROWS],
+                "row_count": min(len(results), MAX_SQL_ROWS),
             }
-            if len(rows) > MAX_SQL_ROWS:
+            if len(results) > MAX_SQL_ROWS:
                 env["truncated"] = True
             return env
         except Exception as e:  # noqa: BLE001 — envelope contract
             return {"success": False, "generated_sql": cleaned, "error": str(e)}
+
+    def _driver_rows(self, df: DataFrame) -> list[dict] | None:
+        """Up to MAX_SQL_ROWS + 1 result rows from DuckDB, or None when
+        the Spark tier must answer (any DuckDB error but the deadline)."""
+        plan = self._sql.prepare(df) if self._sql is not None else None
+        if plan is None:
+            return None
+        sql, names = plan
+        cur = self._sql.cursor()
+        try:
+            with _deadline(cur.interrupt):
+                rows = cur.execute(sql).fetchmany(MAX_SQL_ROWS + 1)
+        except TimeoutError:
+            raise
+        except Exception:  # noqa: BLE001 — Spark answers instead
+            return None
+        return [dict(zip(names, r)) for r in rows]
+
+    def _spark_rows(self, df: DataFrame) -> list[dict]:
+        """Up to MAX_SQL_ROWS + 1 result rows from Spark, under a job tag
+        of this call's own that the deadline cancels."""
+        sc = self.spark.sparkContext
+        tag = f"query_database-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            with _deadline(lambda: sc.cancelJobsWithTag(tag)):
+                rows = df.limit(MAX_SQL_ROWS + 1).collect()
+        finally:
+            sc.removeJobTag(tag)
+        return [r.asDict(recursive=True) for r in rows]
 
     # ------------------------------------------------- ops persistence
 
@@ -520,8 +602,11 @@ class DatacapsuleAPI:
 
     def register_tables(self, tables: dict[str, DataFrame]) -> None:
         """Expose DataFrames to query_database (SQL views), including
-        the 4-table relational layer from materialize.build_relational."""
+        the 4-table relational layer from materialize.build_relational.
+        Re-registering a name drops the driver tier's old snapshot."""
         for name, df in tables.items():
+            if self._sql is not None:
+                df = self._sql.register(name, df)
             df.createOrReplaceTempView(name)
 
     def describe_schema(self) -> dict[str, list[dict]]:

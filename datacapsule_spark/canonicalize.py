@@ -29,14 +29,15 @@ from pyspark.sql.types import StructField, StructType
 
 
 def collect_capped(df: DataFrame, cap: int, arrow: bool = False):
-    """All rows of df (a pandas frame when ``arrow``), or None when it has
-    more than ``cap``: the limit rides on the collect itself, so sizing
-    the tier costs no counting pass. This is the one driver/Spark tier
-    gate (here and in api)."""
+    """All rows of df (a pyarrow Table when ``arrow``), or None when it
+    has more than ``cap``: the limit rides on the collect itself, so
+    sizing the tier costs no counting pass. This is the one driver/Spark
+    tier gate (here, in linking and in api). The Arrow table keeps every
+    Spark type exactly: a nullable int column holding a NULL stays int."""
     if cap <= 0:
         return None
     capped = df.limit(cap + 1)
-    rows = capped.toPandas() if arrow else capped.collect()
+    rows = capped.toArrow() if arrow else capped.collect()
     return None if len(rows) > cap else rows
 
 
