@@ -24,21 +24,22 @@ engines and keep their call sites:
   → S9, re-expressed as O(record) atomic per-id files, DataFrame-loadable)
 
 Two tiers answer the six graph/lookup/vector tools, chosen by one row
-limit, ``driver_threshold`` (the ``canonicalize.connected_components``
-pattern):
+limit, ``driver_threshold``, at the tier gate ``collect_capped``:
 
 - index tier: nodes of at most ``driver_threshold`` rows are collected
-  once into an immutable driver index (``_ServingIndex``), like the
-  reference's in-RAM NetworkX graph and vector store (react_tools.py:
-  45-65, nanovector_db.py:69-110). The embeddings join it when the API
-  opens, the edges on the first graph-tool call (a both-direction CSR
-  adjacency, built lazily so that a restart answering only lookups never
-  collects them), each under the same row limit. Each tool call is then
-  plain numpy/dict work: zero Spark jobs. The index is a snapshot taken
-  at open: rows written to the tables afterwards are not seen.
+  once, as an Arrow table, into an immutable driver index
+  (``_ServingIndex``), like the reference's in-RAM NetworkX graph and
+  vector store (react_tools.py:45-65, nanovector_db.py:69-110). The
+  embeddings join it when the API opens, the edges on the first
+  graph-tool call (a both-direction CSR adjacency, built lazily so that
+  a restart answering only lookups never collects them), each under the
+  same row limit. Each tool call is then plain numpy/dict work: zero
+  Spark jobs. The index is a snapshot taken at open: rows written to the
+  tables afterwards are not seen.
 - Spark tier: above the limit (or with ``driver_threshold=0``) each call
   runs the distributed ``traverse`` / ``vectorize`` functions over the
-  cached tables.
+  cached tables (cached on the first graph call when only the edges are
+  over the limit).
 
 Both tiers return the same answers (tests/test_serving_index.py).
 
@@ -74,7 +75,7 @@ from pyspark.sql import functions as F
 
 from .canonicalize import collect_capped
 from .sql_tier import DriverSQL
-from .traverse import NODE_HIERARCHY
+from .traverse import MAX_HOPS, NODE_HIERARCHY
 from .traverse import find_nodes_by_node_type as _bfs
 from .traverse import get_adjacent_descriptions
 from .vectorize import cosine_topk, hash_embed_text
@@ -88,7 +89,6 @@ DRIVER_THRESHOLD = 500_000
 MAX_SQL_ROWS = 10_000
 # query_database stops a query that runs longer (seconds; read per call)
 SQL_DEADLINE_S = 60.0
-MAX_HOPS = 7  # traverse.find_nodes_by_node_type's default
 
 
 def _segments(ptr: np.ndarray, sel: np.ndarray):
@@ -144,20 +144,21 @@ class _ServingIndex:
     each type separately (exactly what the Spark tier's joins do).
     """
 
-    def __init__(self, rows: list, hierarchy: dict[str, int], emb: pa.Table | None):
-        self.total = len(rows)
-        self.type_counts = Counter(r["node_type"] for r in rows)
-        self.first_row: dict = {}  # node_id → its first row, as Spark's first()
+    def __init__(self, nodes: pa.Table, hierarchy: dict[str, int], emb: pa.Table | None):
+        self.nodes = nodes
+        self.total = len(nodes)
+        ids, types, node_names = (nodes[c].to_pylist() for c in ("node_id", "node_type", "name"))
+        self.type_counts = Counter(types)
+        self.first_row: dict = {}  # node_id → position of its first row in nodes
         typed: dict[tuple, None] = {}
         names: dict[str, set] = {}
-        for r in rows:
-            nid = r["node_id"]
+        for i, (nid, t, name) in enumerate(zip(ids, types, node_names)):
             if nid is None:  # never matches a Spark join or filter
                 continue
-            self.first_row.setdefault(nid, r)
-            typed[(nid, r["node_type"])] = None
-            if r["name"] is not None:
-                names.setdefault(nid, set()).add(r["name"])
+            self.first_row.setdefault(nid, i)
+            typed[(nid, t)] = None
+            if name is not None:
+                names.setdefault(nid, set()).add(name)
         self.ids = list(self.first_row)
         self.pos = {nid: i for i, nid in enumerate(self.ids)}
         self.names = [frozenset(names.get(nid, ())) for nid in self.ids]
@@ -195,7 +196,7 @@ class _ServingIndex:
         if self._adj is None:
             with self._lock:
                 if self._adj is None:
-                    e = collect_capped(edges.select("src", "dst"), cap, arrow=True)
+                    e = collect_capped(edges.select("src", "dst"), cap)
                     self._adj = False if e is None else self._build_adjacency(
                         _objects(e, "src"), _objects(e, "dst"))
         return self._adj or None
@@ -314,20 +315,16 @@ class DatacapsuleAPI:
         self.hierarchy = hierarchy
         self.driver_threshold = driver_threshold
         self._dim = None  # Spark-tier embedding width, probed once
-        # Tier choice: nodes with at most driver_threshold rows are served
-        # from a driver index snapshot taken here (embeddings too, under
-        # the same limit); its edge adjacency is built on the first graph
-        # call (_graph). Otherwise every tool runs on Spark over the
-        # cached tables, mirroring the reference's in-RAM load
-        # (react_tools.py:45-65) but distributed.
-        rows = collect_capped(nodes, driver_threshold)
+        # Tier choice (module docstring): the index snapshot is taken
+        # here, its edge adjacency on the first graph call (_graph).
+        table = collect_capped(nodes, driver_threshold)
         emb = None
-        if rows is not None and embeddings is not None:
+        if table is not None and embeddings is not None:
             emb = collect_capped(
                 embeddings.select("id", "entity_type", "name", "embedding"),
-                driver_threshold, arrow=True)
-        self._index = None if rows is None else _ServingIndex(
-            rows, hierarchy or NODE_HIERARCHY, emb)
+                driver_threshold)
+        self._index = None if table is None else _ServingIndex(
+            table, hierarchy or NODE_HIERARCHY, emb)
         # query_database's driver tier: snapshots of the registered views
         self._sql = DriverSQL(driver_threshold) if driver_threshold > 0 else None
         if self._index is None:
@@ -342,10 +339,14 @@ class DatacapsuleAPI:
 
     def _graph(self):
         """The index adjacency, or None when the graph tools run on Spark
-        (over uncached tables when only the edges are over the limit)."""
+        (the first refusal of the edges caches both tables for it)."""
         if self._index is None:
             return None
-        return self._index.graph(self.edges, self.driver_threshold)
+        adj = self._index.graph(self.edges, self.driver_threshold)
+        if adj is None and not self.edges.is_cached:
+            self.nodes.cache()
+            self.edges.cache()
+        return adj
 
     # ------------------------------------------------------ graph tools
 
@@ -381,14 +382,16 @@ class DatacapsuleAPI:
         return {s: {"nodes_count": len(v), "nodes": sorted(v)} for s, v in out.items()}
 
     def get_node_attribute(self, node_id: str) -> dict | None:
-        """Tool 4: full attr dict of one node."""
-        if self._index is not None:
-            row = self._index.first_row.get(node_id)
+        """Tool 4: full attr dict of one node, built from a one-row Arrow
+        table on both tiers."""
+        if self._index is not None:  # the first row, as the Spark tier's limit(1)
+            i = self._index.first_row.get(node_id)
+            row = self._index.nodes.slice(i or 0, 0 if i is None else 1)
         else:
-            row = self.nodes.where(F.col("node_id") == node_id).first()
-        if row is None:
+            row = self.nodes.where(F.col("node_id") == node_id).limit(1).toArrow()
+        if not len(row):
             return None
-        d = row.asDict()
+        d = row.to_pylist()[0]
         d["attrs"] = dict(d.get("attrs") or {})
         return d
 

@@ -12,10 +12,11 @@ tools/entity_extraction.py:93-133) with true distributed
 canonicalization: alias pairs from linking.py become edges; each
 connected component collapses to `min(node_id)` as canonical_id.
 
-Scale notes: one capped collect (`collect_capped`, shared with the
-serving index in api.py) picks the tier: an edge list of at most
-`driver_threshold` rows is closed by driver union-find, a larger one by
-the distributed loop. There each round is two self-joins + groupBys on
+Scale notes: one capped collect (`collect_capped`, the package's one
+driver/Spark tier gate: CC, linking.alias_pairs, graph_stats' SCC, the
+api serving index, sql_tier snapshots and vectorize's batch kernels)
+picks the tier: an edge list of at most `driver_threshold` rows is
+closed by driver union-find, a larger one by the distributed loop. There each round is two self-joins + groupBys on
 (src,dst) — all shuffle-partitioned by key, no driver materialization
 except the O(1) convergence probe. Star-graph skew (one canonical id
 with 10^8 aliases) is exactly what large-star alternation bounds.
@@ -23,22 +24,23 @@ with 10^8 aliases) is exactly what large-star alternation bounds.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 
-def collect_capped(df: DataFrame, cap: int, arrow: bool = False):
-    """All rows of df (a pyarrow Table when ``arrow``), or None when it
-    has more than ``cap``: the limit rides on the collect itself, so
-    sizing the tier costs no counting pass. This is the one driver/Spark
-    tier gate (here, in linking and in api). The Arrow table keeps every
-    Spark type exactly: a nullable int column holding a NULL stays int."""
+def collect_capped(df: DataFrame, cap: int) -> pa.Table | None:
+    """All rows of df as a pyarrow Table, or None when it has more than
+    ``cap`` rows (or ``cap`` <= 0). The limit rides on the collect itself,
+    so sizing the tier costs no counting pass below the limit; above it
+    the gate pulls ``cap + 1`` rows to the driver and drops them. This is
+    the package's one driver/Spark tier gate. The table keeps every Spark
+    type exactly: a nullable int column holding a NULL stays int."""
     if cap <= 0:
         return None
-    capped = df.limit(cap + 1)
-    rows = capped.toArrow() if arrow else capped.collect()
-    return None if len(rows) > cap else rows
+    table = df.limit(cap + 1).toArrow()
+    return None if len(table) > cap else table
 
 
 def connected_components(
@@ -59,7 +61,7 @@ def connected_components(
     one capped collect of the deduped edges (``collect_capped``):
 
     - at most driver_threshold edges: driver-side union-find over the
-      collected rows. The CC input here is the ALIAS-PAIR dictionary —
+      collected table. The CC input here is the ALIAS-PAIR dictionary —
       O(distinct linked names), orders of magnitude smaller than the
       corpus — and below ~10^6 pairs the distributed loop's cost is pure
       scheduling latency (each round is 4+ tiny jobs; measured ~60-70s
@@ -85,9 +87,9 @@ def connected_components(
     # loop: the capped collect fills it, and above the limit round 1's
     # four reads of e (twice in nbrs, twice in the convergence check)
     # reuse it; an eager checkpoint after the probe would run it twice
-    rows = collect_capped(e, driver_threshold)
-    if rows is not None:
-        return _driver_union_find(spark, rows, e.schema["u"].dataType)
+    table = collect_capped(e, driver_threshold)
+    if table is not None:
+        return _driver_union_find(spark, table, e.schema["u"].dataType)
 
     for _ in range(max_iter):
         # --- large-star: for each u, attach all neighbors v with v > u
@@ -157,9 +159,9 @@ def connected_components(
     return mapping.union(roots).distinct()
 
 
-def _driver_union_find(spark, rows, id_type) -> DataFrame:
-    """Exact union-find (union-by-min + path compression) over collected
-    (u, v) edge rows — the small-dictionary fast path. Union always
+def _driver_union_find(spark, table: pa.Table, id_type) -> DataFrame:
+    """Exact union-find (union-by-min + path compression) over a collected
+    (u, v) edge table — the small-dictionary fast path. Union always
     parents the larger root under the smaller, so every final root is
     its component's minimum id: identical output to the distributed
     loop (string order: Python code points ≡ Spark UTF8_BINARY)."""
@@ -173,8 +175,8 @@ def _driver_union_find(spark, rows, id_type) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        ra, rb = find(r["u"]), find(r["v"])
+    for u, v in zip(table["u"].to_pylist(), table["v"].to_pylist()):
+        ra, rb = find(u), find(v)
         if ra != rb:
             if rb < ra:
                 ra, rb = rb, ra

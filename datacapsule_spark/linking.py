@@ -22,7 +22,7 @@ Two kinds of link, both exact:
 Both run over the deduped name dictionary, not the corpus (at 10^12-
 file scale the distinct-symbol vocabulary is << corpus size). One
 capped collect of that dictionary (`canonicalize.collect_capped`, the
-gate CC and the serving index use) picks the tier: up to
+package's one tier gate) picks the tier: up to
 LINK_DRIVER_NAMES names, both joins run in plain Python on the driver
 (`_driver_alias_pairs`); above it, as Spark jobs. The tiers are
 equivalence-tested against one brute-force oracle (tests/test_linking.py).
@@ -160,13 +160,11 @@ def alias_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
     One capped collect of it picks the tier:
 
     - at most LINK_DRIVER_NAMES distinct names (read at call time):
-      both joins run in plain Python on the collected rows
+      both joins run in plain Python on the collected table
       (`_driver_alias_pairs`); the whole stage is that collect plus the
       write of the result.
     - more (or LINK_DRIVER_NAMES = 0): exact_norm_alias_pairs ∪
-      fuzzy_alias_pairs as Spark jobs. The gate has then pulled
-      LINK_DRIVER_NAMES + 1 names to the driver and dropped them (the
-      collect_capped cost; small beside the Spark joins at that size).
+      fuzzy_alias_pairs as Spark jobs.
 
     The dictionary sits behind a lazy localCheckpoint: the capped collect
     fills it, so the Spark tier reads it and never re-scans `names`
@@ -177,12 +175,12 @@ def alias_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
         .withColumn("norm", normalize_name(F.col("name")))
         .localCheckpoint(eager=False)
     )
-    rows = collect_capped(dictionary, LINK_DRIVER_NAMES)
-    if rows is not None:
+    table = collect_capped(dictionary, LINK_DRIVER_NAMES)
+    if table is not None:
         # via Arrow: a LocalRelation, so reading the pairs back launches
         # no job
-        table = pa.Table.from_struct_array(pa.array(_driver_alias_pairs(rows), _PAIRS))
-        return names.sparkSession.createDataFrame(table)
+        pairs = pa.Table.from_struct_array(pa.array(_driver_alias_pairs(table), _PAIRS))
+        return names.sparkSession.createDataFrame(pairs)
     return (
         exact_norm_alias_pairs(dictionary)
         .unionByName(fuzzy_alias_pairs(dictionary))
@@ -190,9 +188,9 @@ def alias_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
     )
 
 
-def _driver_alias_pairs(rows) -> list[tuple[str, str, float]]:
-    """The Spark tier's output, computed in Python over collected
-    (name, norm) rows, sorted by (a, b).
+def _driver_alias_pairs(table: pa.Table) -> list[tuple[str, str, float]]:
+    """The Spark tier's output, computed in Python over a collected
+    (name, norm) table, sorted by (a, b).
 
     Normal form: every member of a norm group pairs with the group's min
     name, score 1.0. Fuzzy: the same rarest-first prefix filter (gram
@@ -207,18 +205,19 @@ def _driver_alias_pairs(rows) -> list[tuple[str, str, float]]:
     t = LINK_JACCARD - 1e-9
     pairs: dict[tuple[str, str], float] = {}
 
+    rows = list(zip(table["name"].to_pylist(), table["norm"].to_pylist()))
     groups = defaultdict(list)
-    for r in rows:
-        if r["norm"]:
-            groups[r["norm"]].append(r["name"])
+    for name, norm in rows:
+        if norm:
+            groups[norm].append(name)
     for members in groups.values():
         a = min(members)
         pairs.update(((a, b), 1.0) for b in members if b != a)
 
     grams = {
-        r["name"]: {r["norm"][i : i + 3] for i in range(len(r["norm"]) - 2)}
-        for r in rows
-        if r["norm"] and len(r["norm"]) >= 3
+        name: {norm[i : i + 3] for i in range(len(norm) - 2)}
+        for name, norm in rows
+        if norm and len(norm) >= 3
     }
     freq = Counter(g for gs in grams.values() for g in gs)
     index = defaultdict(list)  # prefix gram → names with it, by size

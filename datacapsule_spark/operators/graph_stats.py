@@ -9,6 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..canonicalize import collect_capped
 
 
 def triangle_count(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFrame:
@@ -310,8 +313,6 @@ def personalized_pagerank(
     if not isinstance(seeds, DataFrame):
         if not seeds:
             raise ValueError("seeds must be non-empty")
-        from pyspark.sql.types import StructField, StructType
-
         seeds = spark.createDataFrame(
             [(x,) for x in set(seeds)],
             StructType([StructField("node", e.schema["s"].dataType)]),
@@ -1432,15 +1433,17 @@ def strongly_connected_components(
     the KG's directed relation graphs (calls/imports cycles).
 
     Two execution paths, same output (equivalence-tested), the exact
-    tiering of canonicalize.connected_components:
+    tiering of canonicalize.connected_components: one capped collect
+    (``collect_capped``) of the deduped, self-loop-free edges picks it.
 
-    - edge count ≤ driver_threshold: iterative Tarjan on the driver.
-      The distributed loop below advances one hop per round in BOTH
-      its coloring and reach sweeps, so on a small graph its cost is
-      pure per-round scheduling latency (r07 measured 84s at sf0.1 —
-      ~1000 nodes — from the round floor alone); Tarjan is O(V+E) and
-      milliseconds there. A big graph usually ARRIVES here small: real
-      call/import graphs are DAG-heavy, and callers can trim first.
+    - at most driver_threshold such edges: iterative Tarjan on the
+      driver over the collected table. The distributed loop below
+      advances one hop per round in BOTH its coloring and reach sweeps,
+      so on a small graph its cost is pure per-round scheduling latency
+      (r07 measured 84s at sf0.1 — ~1000 nodes — from the round floor
+      alone); Tarjan is O(V+E) and milliseconds there. A big graph
+      usually ARRIVES here small: real call/import graphs are
+      DAG-heavy, and callers can trim first.
     - above the threshold (or driver_threshold=0): the Pregel-style
       trim + forward-max-coloring + backward-reach scheme: (1) TRIM
       peels nodes with no in- or no out-edges in the active subgraph
@@ -1455,21 +1458,22 @@ def strongly_connected_components(
       of interlocking cycles need one phase per cycle layer, so a
       non-converged run RAISES (the k_core contract) rather than
       returning a partial assignment."""
+    # lazy: the capped collect fills it for the loop above the limit
     e0 = (
         edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
         .where(F.col("s") != F.col("t"))
         .distinct()
-        .localCheckpoint(eager=True)
-    )
+    ).localCheckpoint(eager=False)
     nodes0 = (
         edges.select(F.col(src).alias("node"))
         .unionAll(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     spark = edges.sparkSession
-    if driver_threshold > 0 and e0.count() <= driver_threshold:
-        return _driver_tarjan(spark, e0, nodes0)
+    table = collect_capped(e0, driver_threshold)
+    if table is not None:
+        return _driver_tarjan(spark, table, nodes0)
+    nodes0 = nodes0.localCheckpoint(eager=True)
     done = spark.createDataFrame([], "node long, component long")
     active_nodes, e = nodes0, e0
     for _ in range(max_phases):
@@ -1599,21 +1603,22 @@ def strongly_connected_components(
     return done
 
 
-def _driver_tarjan(spark, e: DataFrame, nodes: DataFrame) -> DataFrame:
-    """Iterative Tarjan over a collected edge list — the small-graph
-    fast path (gated at ≤ driver_threshold edges by the caller).
-    Output identical to the distributed loop: (node, component) with
-    component = min node id of the SCC; self-loops were already
-    dropped from `e`, and isolated/self-loop-only nodes (present in
-    `nodes` but not `e`) come out as singletons, as in the trim sweep.
+def _driver_tarjan(spark, e, nodes: DataFrame) -> DataFrame:
+    """Iterative Tarjan over a collected (s, t) edge table — the
+    small-graph fast path (gated at ≤ driver_threshold edges by the
+    caller), which collects the node set `nodes` here. Output identical
+    to the distributed loop: (node, component) with component = min
+    node id of the SCC; self-loops were already dropped from `e`, and
+    self-loop-only nodes (in `nodes` but not `e`) come out as
+    singletons, as in the trim sweep.
     Iterative (explicit stack + per-node neighbor iterators): Python's
     recursion limit dies at ~1000-deep chains, far below the gate."""
     from collections import defaultdict
 
     adj: dict = defaultdict(list)
-    for r in e.collect():
-        adj[r["s"]].append(r["t"])
-    all_nodes = [r["node"] for r in nodes.collect()]
+    for s, t in zip(e["s"].to_pylist(), e["t"].to_pylist()):
+        adj[s].append(t)
+    all_nodes = nodes.toArrow()["node"].to_pylist()
 
     index: dict = {}
     low: dict = {}
@@ -1661,8 +1666,6 @@ def _driver_tarjan(spark, e: DataFrame, nodes: DataFrame) -> DataFrame:
                 m = min(members)
                 for w in members:
                     comp[w] = m
-
-    from pyspark.sql.types import StructField, StructType
 
     id_type = nodes.schema["node"].dataType
     schema = StructType(

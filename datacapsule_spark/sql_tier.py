@@ -25,7 +25,7 @@ DuckDB error. tests/test_serving_index.py pins the two tiers' envelopes
 equal over a hypothesis grammar of allowlisted queries.
 
 Snapshot rule: a view is copied (one ``collect_capped`` under the API's
-``driver_threshold``, as an Arrow table) on its second allowlisted query;
+``driver_threshold``) on its second allowlisted query;
 its first runs on Spark, since a copy costs about two Spark queries. A
 view over the limit is remembered and stays on Spark. A snapshot is
 taken once: rows written to the view's source afterwards are not seen
@@ -394,7 +394,7 @@ class DriverSQL:
             return
         try:
             tbl = collect_capped(df.toDF(*[f"c{p}" for p in range(len(df.columns))])
-                                 .select(*cols), self.cap, arrow=True)
+                                 .select(*cols), self.cap)
         except Exception:  # noqa: BLE001 — the Spark tier reports it
             return
         if tbl is not None:

@@ -40,6 +40,9 @@ NODE_HIERARCHY = {
     "raw": 5,
 }
 
+# Hop bound of find_nodes_by_node_type (both serving tiers use it)
+MAX_HOPS = 7
+
 
 def _rank_map_col(hierarchy: dict[str, int] | None = None):
     pairs = []
@@ -61,7 +64,7 @@ def find_nodes_by_node_type(
     edges: DataFrame,
     start_nodes: DataFrame,
     target_type: str,
-    max_hops: int = 7,
+    max_hops: int = MAX_HOPS,
     hierarchy: dict[str, int] | None = None,
 ) -> DataFrame:
     """Batch G1/G2: start_nodes(query_id, node_id) → (query_id, node_id)

@@ -27,8 +27,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .canonicalize import collect_capped
 
 EMBED_DIM = 64
 
@@ -37,28 +39,15 @@ EMBED_DIM = 64
 # dim 1024 and wins below ~dim 64; the crossover sits between)
 AUTO_KERNEL_DIM = 128
 
-# the batch kernels collect the QUERY set to the driver (documented
-# driver-sized contract); this ceiling turns a corpus-sized "queries"
-# DataFrame into an actionable error instead of a driver OOM (the
-# max_exact_nodes routing-guidance pattern, VERDICT r06 #6)
+# the batch kernels collect the QUERY set to the driver through the tier
+# gate, capped here (read at call time): a corpus-sized "queries" frame is
+# an actionable error, not a driver OOM (VERDICT r06 #6)
 MAX_DRIVER_QUERIES = 100_000
-
-
-def _collect_queries(queries: DataFrame, cols, max_queries: int):
-    """collect() the query set with a limit-probe guard: fetching
-    max_queries+1 rows costs nothing extra (same single action) and
-    proves the bound before anything is built from the rows."""
-    rows = queries.select(*cols).limit(max_queries + 1).collect()
-    if len(rows) > max_queries:
-        raise ValueError(
-            f"query set exceeds max_queries={max_queries}: the batch "
-            "kernels ship queries driver-side by design (corpus stays "
-            "distributed). For corpus-scale query sets use the "
-            "distributed paths — cosine_topk_batch (broadcast join) or "
-            "a chunked driver loop — or raise max_queries if the "
-            "driver really has the memory."
-        )
-    return rows
+_TOO_MANY_QUERIES = (
+    "query set exceeds max_queries (vectorize.MAX_DRIVER_QUERIES = {}): "
+    "the batch kernels ship queries to the driver. Use cosine_topk_batch "
+    "(broadcast join) or a chunked loop, or raise the limit."
+)
 
 
 # ------------------------------------------------------- descriptors (G6)
@@ -197,8 +186,6 @@ def cosine_topk_batch(
     queries(query_id, qvec array<float>). Set-oriented G2 analogue —
     free parallelism over both rows and queries.
     """
-    from pyspark.sql import Window
-
     pairs = embeddings.join(F.broadcast(queries))
     scored = pairs.withColumn(
         "sim",
@@ -218,7 +205,6 @@ def cosine_topk_batch_arrow(
     k: int = 10,
     id_col: str = "id",
     vec_col: str = "embedding",
-    max_queries: int = MAX_DRIVER_QUERIES,
 ) -> DataFrame:
     """Wide-dim scale path for batch brute-force k-NN (exact, same
     semantics as cosine_topk_batch).
@@ -246,12 +232,12 @@ def cosine_topk_batch_arrow(
     with rn in 1..k; join payload columns back by broadcasting this
     result against the corpus if needed (candidates ≪ corpus).
     """
-    from pyspark.sql import Window
-
-    qrows = _collect_queries(queries, ("query_id", "qvec"), max_queries)
-    qids_all = [r["query_id"] for r in qrows]
-    qmat_all = np.asarray([list(r["qvec"]) for r in qrows], dtype=np.float64)
-    if len(qrows):
+    qt = collect_capped(queries.select("query_id", "qvec"), MAX_DRIVER_QUERIES)
+    if qt is None:
+        raise ValueError(_TOO_MANY_QUERIES.format(MAX_DRIVER_QUERIES))
+    qids_all = qt["query_id"].to_pylist()
+    qmat_all = np.asarray(qt["qvec"].to_pylist(), dtype=np.float64)
+    if len(qt):
         qnorm = np.linalg.norm(qmat_all, axis=1)
         keep = qnorm > 0.0
         qids = [q for q, m in zip(qids_all, keep) if m]
@@ -321,9 +307,8 @@ def ivf_index(
     Uses pyspark.ml KMeans (distributed Lloyd's); centroids come back
     as a small numpy array for driver-side probe selection.
     """
-    import numpy as np
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array  # noqa: F401
+    from pyspark.ml.functions import array_to_vector
 
     feat = embeddings.withColumn("_features", array_to_vector(F.col(vec_col)))
     km = KMeans(k=n_lists, seed=seed, featuresCol="_features", predictionCol="list_id")
@@ -347,8 +332,6 @@ def ivf_topk(
     partition-pruning predicate when the index is written partitioned
     by list_id (the IVF layout's entire point at 100 TB).
     """
-    import numpy as np
-
     q = np.asarray(query_vec, dtype=np.float64)
     qn = q / (np.linalg.norm(q) or 1.0)
     c = np.asarray(centroids, dtype=np.float64)
@@ -371,7 +354,6 @@ def ivf_topk_batch(
     vec_col: str = "embedding",
     kernel: str = "auto",
     dim: int | None = None,
-    max_queries: int = MAX_DRIVER_QUERIES,
 ) -> DataFrame:
     """Batched IVF probe: Q queries in ONE Spark job (r03 VERDICT item
     4 — the per-query `ivf_topk` loop is Q scheduler round-trips).
@@ -407,9 +389,6 @@ def ivf_topk_batch(
                 22x cliff at production width should not require the
                 caller to know it exists.
     """
-    import numpy as np
-    from pyspark.sql import Window
-
     if kernel == "auto":
         # pass `dim` when the caller knows the embedding width: the
         # first() peek is a real Spark action that re-executes the
@@ -459,13 +438,15 @@ def ivf_topk_batch(
         # per-list rows against that list's query submatrix, emitting
         # map-side per-query top-k in the global (sim desc, id asc)
         # tie order. The window then finalizes ≤ fragments·Q·k rows.
-        qrows = _collect_queries(queries, ("query_id", "qvec"), max_queries)
+        qt = collect_capped(queries.select("query_id", "qvec"), MAX_DRIVER_QUERIES)
+        if qt is None:
+            raise ValueError(_TOO_MANY_QUERIES.format(MAX_DRIVER_QUERIES))
         qindex, qvecs = {}, []
-        for r in qrows:
-            v = np.asarray(list(r["qvec"]), dtype=np.float64)
+        for qid, vec in zip(qt["query_id"].to_pylist(), qt["qvec"].to_pylist()):
+            v = np.asarray(vec, dtype=np.float64)
             n = np.linalg.norm(v)
             if n > 0.0:  # zero-norm query scores NULL on the hof path
-                qindex[r["query_id"]] = len(qvecs)
+                qindex[qid] = len(qvecs)
                 qvecs.append(v / n)
         qid_t = queries.schema["query_id"].dataType.simpleString()
         id_t = indexed.schema[id_col].dataType.simpleString()

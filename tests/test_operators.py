@@ -3837,3 +3837,60 @@ class TestSCC:
                     for r in scc(df, driver_threshold=thr).collect()
                 }
                 assert got == want, f"seed {seed} driver_threshold={thr}"
+
+    def test_tier_limit_counts_deduped_edges(self, spark, monkeypatch):
+        """The limit is inclusive and counts distinct non-loop edges:
+        exactly t edges (here with a duplicate and a self-loop on top)
+        take the driver Tarjan, t+1 the distributed loop, and both
+        equal NetworkX's SCCs (the self-loop-only node a singleton)."""
+        import networkx as nx
+
+        import datacapsule_spark.operators.graph_stats as gs
+
+        tiers = []
+        real = gs._driver_tarjan
+        monkeypatch.setattr(
+            gs, "_driver_tarjan", lambda *a: tiers.append("driver") or real(*a)
+        )
+        base = [(1, 2), (2, 3), (3, 1), (4, 5), (5, 4), (6, 1), (3, 7), (8, 9)]
+        t = len(base)
+        for edges, tier in (
+            (base + [(1, 2), (10, 10)], ["driver"]),
+            (base + [(9, 8)], []),
+        ):
+            tiers.clear()
+            df = spark.createDataFrame(edges, "src long, dst long")
+            got = {
+                r["node"]: r["component"]
+                for r in gs.strongly_connected_components(
+                    df, driver_threshold=t
+                ).collect()
+            }
+            assert tiers == tier
+            g = nx.DiGraph(edges)
+            want = {
+                v: min(c) for c in nx.strongly_connected_components(g) for v in c
+            }
+            assert got == want
+
+    def test_driver_tier_launches_at_most_five_jobs(self, spark):
+        """Below the limit the tier choice is the collect itself: one
+        capped collect of the deduped edges (which fills their lazy
+        checkpoint) and one collect of the node set, no count and no
+        eager pre-checkpoints (the count-gated form launched 9 jobs)."""
+        from datacapsule_spark.operators.graph_stats import (
+            strongly_connected_components as scc,
+        )
+
+        df = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 1), (4, 5), (5, 4), (6, 1), (3, 7), (8, 9)],
+            "src long, dst long",
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("scc-driver-tier", "scc job guard")
+        try:
+            out = scc(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("scc-driver-tier")) <= 5
+        assert {r["component"] for r in out.collect()} == {1, 4, 6, 7, 8, 9}

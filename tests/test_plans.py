@@ -4,6 +4,9 @@ regressed plan fails HERE, not in production."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -540,3 +543,82 @@ def test_hyperball_round_plan_shape(spark):
     assert r.sort_merge_joins == 0 and r.shuffled_hash_joins == 0, r.text
     assert r.cartesian_products == 0 and r.nested_loop_joins == 0, r.text
     assert "Scan ExistingRDD" in r.text, r.text
+
+
+class _TierGateScan(ast.NodeVisitor):
+    """Tier sizing outside the gate in one module: an ordering comparison
+    on a ``.count()`` (or on a name bound to one in the same function)
+    that is not the test of an input guard (an ``if`` whose body only
+    raises), and every ``.limit(<n> + 1)``."""
+
+    ORDER = (ast.Lt, ast.LtE, ast.Gt, ast.GtE)
+
+    def __init__(self, module: str):
+        self.module, self.scope, self.counted, self.hits = module, ["<module>"], [set()], []
+        self.guards: set[int] = set()
+
+    @staticmethod
+    def _is_count(node) -> bool:
+        return (isinstance(node, ast.Call) and not node.args
+                and isinstance(node.func, ast.Attribute) and node.func.attr == "count")
+
+    def _hit(self, node, what: str) -> None:
+        self.hits.append((self.module, self.scope[-1], node.lineno, what))
+
+    def visit_FunctionDef(self, node):
+        self.scope.append(node.name)
+        self.counted.append(set())
+        self.generic_visit(node)
+        self.scope.pop()
+        self.counted.pop()
+
+    visit_AsyncFunctionDef = visit_FunctionDef
+
+    def visit_Assign(self, node):
+        if self._is_count(node.value):
+            self.counted[-1].update(t.id for t in node.targets if isinstance(t, ast.Name))
+        self.generic_visit(node)
+
+    def visit_If(self, node):
+        if all(isinstance(s, ast.Raise) for s in node.body):
+            self.guards.add(id(node.test))
+        self.generic_visit(node)
+
+    def visit_Compare(self, node):
+        sides = [node.left, *node.comparators]
+        if (id(node) not in self.guards and any(isinstance(o, self.ORDER) for o in node.ops)
+                and any(self._is_count(s) or (isinstance(s, ast.Name) and s.id in self.counted[-1])
+                        for s in sides)):
+            self._hit(node, ast.unparse(node))
+        self.generic_visit(node)
+
+    def visit_Call(self, node):
+        if (isinstance(node.func, ast.Attribute) and node.func.attr == "limit" and node.args
+                and isinstance(arg := node.args[0], ast.BinOp) and isinstance(arg.op, ast.Add)
+                and any(isinstance(s, ast.Constant) and s.value == 1
+                        for s in (arg.left, arg.right))):
+            self._hit(node, ast.unparse(arg))
+        self.generic_visit(node)
+
+
+def tier_gate_violations(package: pathlib.Path) -> list[tuple]:
+    """(module, function, line, code) of every tier sized outside
+    ``canonicalize.collect_capped``; api._spark_rows' result cut at
+    MAX_SQL_ROWS + 1 is not a tier and is allowed."""
+    allowed = {("canonicalize.py", "collect_capped"), ("api.py", "_spark_rows")}
+    hits = []
+    for path in sorted(package.rglob("*.py")):
+        scan = _TierGateScan(path.relative_to(package).as_posix())
+        scan.visit(ast.parse(path.read_text(encoding="utf-8")))
+        hits += [h for h in scan.hits if h[:2] not in allowed
+                 or (h[1] == "_spark_rows" and h[3] != "MAX_SQL_ROWS + 1")]
+    return hits
+
+
+def test_every_tier_goes_through_one_gate():
+    """Every driver-or-Spark choice is one capped Arrow collect
+    (canonicalize.collect_capped): no module sizes a tier with a count()
+    against a threshold or caps a frame with its own limit(n + 1)."""
+    import datacapsule_spark
+
+    assert tier_gate_violations(pathlib.Path(datacapsule_spark.__file__).parent) == []

@@ -216,6 +216,37 @@ def test_index_tools_launch_no_spark_jobs(spark):
     assert _job_ids(sc, "guard-probe", [lambda: spark.range(3).count()])  # the probe sees jobs
 
 
+def test_edges_over_the_limit_cache_the_spark_tier(spark):
+    """Nodes under the limit, edges over it: the first graph call is
+    refused the adjacency and caches both tables for the Spark tier,
+    whose answers equal the all-Spark API's."""
+    rows = [("repo:r", "repo", "r", None), ("dir:r/d", "dir", "d", None),
+            ("file:r/d/f.py", "file", "f.py", None), ("symbol:r/d/f.py:g", "symbol", "g", None)]
+    edges = [("repo:r", "dir:r/d"), ("dir:r/d", "file:r/d/f.py"),
+             ("file:r/d/f.py", "symbol:r/d/f.py:g"), ("repo:r", "file:r/d/f.py"),
+             ("dir:r/d", "symbol:r/d/f.py:g")]
+
+    def tables():  # fresh frames per API: the Spark-tier API caches its own
+        return (spark.createDataFrame(rows, NODES),
+                spark.createDataFrame([(s, "r", d, None, None) for s, d in edges], EDGES))
+
+    api = DatacapsuleAPI(spark, *tables(), driver_threshold=len(rows))
+    assert api._index is not None and not api.edges.is_cached
+    got = api.find_nodes_by_node_type("repo:r", "symbol")
+    assert api._index._adj is False
+    assert api.nodes.is_cached and api.edges.is_cached
+    dist = DatacapsuleAPI(spark, *tables(), driver_threshold=0)
+    assert got == dist.find_nodes_by_node_type("repo:r", "symbol")
+    starts = ["repo:r", "dir:r/d"]
+    assert (api.batch_find_nodes_by_node_type(starts, "file")
+            == dist.batch_find_nodes_by_node_type(starts, "file"))
+    assert (api.get_adjacent_node_descriptions(starts)
+            == dist.get_adjacent_node_descriptions(starts))
+    for a in (api, dist):
+        a.nodes.unpersist()
+        a.edges.unpersist()
+
+
 # ------------------------------------------------------- query_database
 
 T1 = {"k": "int", "a": "bigint", "s": "string", "b": "boolean", "d": "double"}

@@ -262,7 +262,7 @@ class TestArrowKNN:
             "query_id", "id", "sim", "rn",
         ]
 
-    def test_driver_query_collect_guarded(self, spark):
+    def test_driver_query_collect_guarded(self, spark, monkeypatch):
         """The batch kernels collect the QUERY set driver-side by
         contract; a corpus-sized query DataFrame must raise with
         routing guidance (the max_exact_nodes pattern), not OOM the
@@ -270,6 +270,7 @@ class TestArrowKNN:
         action, so a compliant set still works at the ceiling."""
         import pytest as _pytest
 
+        import datacapsule_spark.vectorize as V
         from datacapsule_spark.vectorize import (
             cosine_topk_batch_arrow, ivf_index, ivf_topk_batch,
         )
@@ -278,16 +279,19 @@ class TestArrowKNN:
         queries = df.select(
             F.col("id").alias("query_id"), F.col("embedding").alias("qvec")
         )
+        monkeypatch.setattr(V, "MAX_DRIVER_QUERIES", 10)
         with _pytest.raises(ValueError, match="max_queries"):
-            cosine_topk_batch_arrow(df, queries, k=3, max_queries=10)
+            cosine_topk_batch_arrow(df, queries, k=3)
+        monkeypatch.setattr(V, "MAX_DRIVER_QUERIES", 30)
         assert (
-            cosine_topk_batch_arrow(df, queries, k=1, max_queries=30).count()
+            cosine_topk_batch_arrow(df, queries, k=1).count()
             == 30
         )
         indexed, cents = ivf_index(df, n_lists=2, seed=1)
+        monkeypatch.setattr(V, "MAX_DRIVER_QUERIES", 10)
         with _pytest.raises(ValueError, match="max_queries"):
             ivf_topk_batch(
                 indexed, cents, queries, k=2, n_probe=2,
-                kernel="arrow", max_queries=10,
+                kernel="arrow",
             )
 
